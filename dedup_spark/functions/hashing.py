@@ -38,9 +38,9 @@ def hash64_bytes(b: bytes) -> int:
 def content_digest(image_bytes: bytes, caption: str) -> str:
     """Exact-dup content digest: sha256 over bytes || 0x00 || utf8(caption).
 
-    Spark analog of the reference's per-file digest; the DataFrame side
-    computes the identical value with built-in F.sha2(F.concat(...), 256)
-    (dedup_spark.operators.exact) — keep the two in lockstep.
+    Spark analog of the reference's per-file digest; the signature stage
+    (dedup_spark.operators.signatures) emits it as the ``sha256`` column of
+    every image row.
     """
     h = hashlib.sha256()
     h.update(image_bytes)

@@ -5,7 +5,8 @@ Output: (image_id, family, band_idx, band_key) with families
             are excluded — the empty-signature sentinel must not bucket)
   simhash : 4 x 16-bit slices via built-in shiftrightunsigned/and (codegen'd)
   phash   : 2-of-8 band COMBINATIONS — C(8,2)=28 16-bit keys per row, each
-            the concatenation of two 8-bit slices
+            the concatenation of two 8-bit slices (NULL-phash text rows are
+            excluded — they have no pixel family)
 
 Why combos for phash: single 8-bit slices give only 256 distinct buckets, so
 at any realistic corpus size every row collides with n/256 strangers — the
@@ -96,7 +97,7 @@ def band_table(sigs: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFra
         with_caption, "simhash", "simhash", cfg.simhash_bands, cfg.simhash_band_bits
     )
     ph = _combo_bands_df(
-        sigs, "phash", "phash", cfg.phash_bands, cfg.phash_band_bits,
-        cfg.phash_combo_r,
+        sigs.where(F.col("phash").isNotNull()), "phash", "phash",
+        cfg.phash_bands, cfg.phash_band_bits, cfg.phash_combo_r,
     )
     return mh.unionByName(sim).unionByName(ph)

@@ -195,10 +195,10 @@ def containment_candidates(
     anchors = gram_df.where("is_anchor")
     anchor_keys = anchors.select("gram").distinct()
     if n_docs_hint is None:
-        # anchors ≤ 1 per doc, so the doc count bounds the broadcast size
-        # from above without scanning the 150M-row index (the old
-        # anchors.count() action cost ~8 s per arm at n=6.4M); sigs is a
-        # committed stage table, so its count is a footer-metadata job
+        # no doc count from the caller: count the anchor rows themselves —
+        # one scan of the caller-materialized index. containment_stage
+        # passes sigs.count() instead (anchors ≤ 1 per doc; on a committed
+        # stage table that count is a footer-metadata job)
         n_docs_hint = gram_df.where("is_anchor").count()
     if n_docs_hint <= cfg.containment_broadcast_max:
         anchor_keys = F.broadcast(anchor_keys)

@@ -1,27 +1,16 @@
 """Exact duplicates via content-hash groupBy (SURVEY.md §2 B9/B23) —
 the Spark analog of the reference's per-file digest walk + digest→entries map.
 
-Digest = sha256(bytes || 0x00 || utf8(caption)), computed entirely with JVM
-built-ins (F.sha2 over F.concat of binary columns) so the scan → project →
-hash pipeline stays in whole-stage codegen; functions.hashing.content_digest
-is the bit-identical Python twin used by the oracle.
+The digest is the ``sha256`` column of the signature table
+(operators.signatures): sha256(bytes || 0x00 || utf8(caption)) for image rows,
+sha256(utf8(caption)) for text rows; functions.hashing.content_digest is the
+image digest's twin used by the oracle.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def content_digest_col() -> Column:
-    return F.sha2(
-        F.concat(F.col("bytes"), F.lit(b"\x00"), F.encode(F.col("caption"), "utf-8")),
-        256,
-    )
-
-
-def with_digest(df: DataFrame) -> DataFrame:
-    return df.withColumn("sha256", content_digest_col())
 
 
 def exact_clusters(sigs: DataFrame) -> DataFrame:

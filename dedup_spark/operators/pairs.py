@@ -16,9 +16,6 @@ bounded by the other bands/families and asserted ≥ 0.99 by the golden gate.
 This mirrors the standard production MinHash-LSH dedup layout (group by band
 hash → edge to group representative).
 
-``all_pairs`` keeps the exact in-bucket self-join (a < b) for small-scale
-exhaustive comparisons and tests.
-
 Cross-family/band dedup → distinct (a, b): a pair found by 16 bands still
 verifies exactly once (map-side combine collapses duplicates pre-shuffle).
 """
@@ -49,20 +46,9 @@ def _star_pairs(salted_bands: DataFrame) -> DataFrame:
     return member_edges.unionByName(rep_edges)
 
 
-def _all_pairs(salted_bands: DataFrame) -> DataFrame:
-    x = salted_bands.select(*_SKEY, F.col("image_id").alias("a"))
-    y = salted_bands.select(*_SKEY, F.col("image_id").alias("b"))
-    return (
-        x.join(y, _SKEY, "inner")
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b")
-    )
-
-
-def candidate_pairs(salted_bands: DataFrame, strategy: str = "star") -> DataFrame:
+def candidate_pairs(salted_bands: DataFrame) -> DataFrame:
     df = salted_bands.drop("hot") if "hot" in salted_bands.columns else salted_bands
-    pairs = _star_pairs(df) if strategy == "star" else _all_pairs(df)
-    return pairs.dropDuplicates(["a", "b"])
+    return _star_pairs(df).dropDuplicates(["a", "b"])
 
 
 def orphan_rescue_pairs(

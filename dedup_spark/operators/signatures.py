@@ -14,7 +14,6 @@ from __future__ import annotations
 import hashlib
 from typing import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -28,7 +27,7 @@ from pyspark.sql.types import (
 )
 
 from dedup_spark.config import DEFAULT_CONFIG, PipelineConfig
-from dedup_spark.functions.hashing import to_signed64
+from dedup_spark.functions.hashing import content_digest, to_signed64
 from dedup_spark.functions.minhash import band_keys, minhash_batch, perm_params
 from dedup_spark.functions.phash import phash_batch
 from dedup_spark.functions.simhash import simhash_batch
@@ -43,7 +42,7 @@ SIG_SCHEMA = StructType(
         StructField("shingles", ArrayType(LongType(), False), False),
         StructField("minhash_bands", ArrayType(LongType(), False), False),
         StructField("simhash", LongType(), False),
-        StructField("phash", LongType(), False),
+        StructField("phash", LongType(), True),
         StructField("depth", IntegerType(), False),
     ]
 )
@@ -59,11 +58,16 @@ def compute_signatures(
     ``recompute_phash=False`` trusts the input's phash column and skips
     decoding entirely (for inputs whose pixels are certified upstream);
     the default decodes and hashes the actual payload (B13).
+
+    A frame with no ``bytes`` column is a text table (image_id, caption):
+    its rows carry a NULL ``phash`` — the pHash family is absent, so banding
+    and verify skip it — and a digest over the caption alone.
     """
     a_params, b_params = perm_params(cfg)
     k = cfg.shingle_k
     nb, nr = cfg.minhash_bands, cfg.minhash_rows
     ph_size, ph_block = cfg.phash_size, cfg.phash_block
+    pixels = "bytes" in images.columns
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         memo: dict = {}
@@ -72,26 +76,29 @@ def compute_signatures(
             if n == 0:
                 continue
             captions = pdf["caption"].tolist()
-            raw = pdf["bytes"].tolist()
             norms = [normalize_caption(c) for c in captions]
             sh = [shingle_hashes(s, k, memo) for s in norms]
             sig = minhash_batch(sh, a_params, b_params)
             bands = to_signed64(band_keys(sig, nb, nr))
             sim = to_signed64(simhash_batch(sh))
-            if recompute_phash:
-                ph = to_signed64(
-                    phash_batch(
-                        pdf["fmt"].tolist(), raw,
-                        pdf["w"].tolist(), pdf["h"].tolist(),
-                        size=ph_size, block=ph_block,
-                    )
-                )
+            if not pixels:
+                ph = [None] * n
+                digests = [
+                    hashlib.sha256(c.encode("utf-8")).hexdigest() for c in captions
+                ]
             else:
-                ph = pdf["phash"].to_numpy()
-            digests = [
-                hashlib.sha256(b + b"\x00" + c.encode("utf-8")).hexdigest()
-                for b, c in zip(raw, captions)
-            ]
+                raw = pdf["bytes"].tolist()
+                if recompute_phash:
+                    ph = to_signed64(
+                        phash_batch(
+                            pdf["fmt"].tolist(), raw,
+                            pdf["w"].tolist(), pdf["h"].tolist(),
+                            size=ph_size, block=ph_block,
+                        )
+                    )
+                else:
+                    ph = pdf["phash"].to_numpy()
+                digests = [content_digest(b, c) for b, c in zip(raw, captions)]
             ids = pdf["image_id"].tolist()
             yield pd.DataFrame(
                 {
@@ -108,9 +115,11 @@ def compute_signatures(
             )
 
     # project to exactly what's needed before the UDF: Arrow ships fewer bytes
-    cols = ["image_id", "bytes", "w", "h", "fmt", "caption"]
-    if not recompute_phash:
-        cols.append("phash")
+    cols = ["image_id", "caption"]
+    if pixels:
+        cols += ["bytes", "w", "h", "fmt"]
+        if not recompute_phash:
+            cols.append("phash")
     from dedup_spark.session import py_parallelism
 
     # UDF stages run at half the core count (see session.py_parallelism):
@@ -119,15 +128,8 @@ def compute_signatures(
     return src.mapInPandas(run, schema=SIG_SCHEMA)
 
 
-def signatures_slim(sigs: DataFrame) -> DataFrame:
-    """Drop the shingle array for stages that only need fixed-width columns."""
-    return sigs.select(
-        "image_id", "sha256", "n_shingles", "minhash_bands", "simhash", "phash", "depth"
-    )
-
-
 def depth_col(c: str = "image_id") -> F.Column:
     return F.size(F.split(F.col(c), "/")) - F.lit(1)
 
 
-__all__ = ["compute_signatures", "signatures_slim", "SIG_SCHEMA", "depth_col"]
+__all__ = ["compute_signatures", "SIG_SCHEMA", "depth_col"]

@@ -49,10 +49,6 @@ _KEY = ["family", "band_idx", "band_key"]
 HAMMING_FAMILIES = ("simhash", "phash")
 
 
-def bucket_census(bands: DataFrame) -> DataFrame:
-    return bands.groupBy(*_KEY).agg(F.count("*").alias("bucket_size"))
-
-
 def _fanout_col(cfg: PipelineConfig):
     raw = F.ceil(F.col("bucket_size") / cfg.bucket_cap).cast("int")
     return F.when(F.col("bucket_size") <= cfg.bucket_cap, F.lit(1)).otherwise(

@@ -6,7 +6,8 @@ built-in expression — NO Python in this stage:
   jaccard     exact shingle-set Jaccard via array_intersect/size (the shingle
               arrays are distinct-valued by construction)
   hamming_sim bit_count(simhash_a ^ simhash_b)   (guarded: both captioned)
-  hamming_ph  bit_count(phash_a ^ phash_b)
+  hamming_ph  bit_count(phash_a ^ phash_b)     (NULL when a side has no
+              pHash — a text row: the family is absent, f_phash is false)
   exact       sha256 equality
 
 verified = any family passes its pinned threshold; the per-family booleans
@@ -39,7 +40,7 @@ def verify_pairs(
     Phase 1 joins only fixed-width columns and decides exact/simhash/phash;
     phase 2 joins the arrays ONLY for pairs whose simhash distance makes
     J >= threshold statistically possible (E[d] ≈ 10, sd ≈ 3 at J = 0.8;
-    ``simhash_slack`` = +5 sd) — the same layout rescue_verify_pairs uses.
+    ``simhash_slack`` = +5 sd).
     Implausible pairs report jaccard 0.0 (they cannot pass the threshold);
     all family decisions are unchanged.
 
@@ -121,7 +122,10 @@ def verify_pairs(
             & (F.col("hamming_sim") <= F.lit(cfg.simhash_hamming_max)),
         )
         .withColumn(
-            "f_phash", F.col("hamming_ph") <= F.lit(cfg.phash_hamming_max)
+            "f_phash",
+            F.coalesce(
+                F.col("hamming_ph") <= F.lit(cfg.phash_hamming_max), F.lit(False)
+            ),
         )
     )
     out = out.withColumn(
@@ -139,57 +143,8 @@ def verified_edges(verified: DataFrame) -> DataFrame:
 
 
 def rescue_verify_pairs(
-    pairs: DataFrame,
-    sigs: DataFrame,
-    cfg: PipelineConfig = DEFAULT_CONFIG,
-    simhash_slack: int = 24,
-    use_phash: bool = True,
+    pairs: DataFrame, sigs: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG
 ) -> DataFrame:
-    """Verification sized for the rescue pass's candidate volume.
-
-    Rescue candidates are dominated by random band-key collisions, so the
-    full verify join — which ships each side's shingle ARRAY — would move
-    ~20× more shuffle bytes than needed to reject them. Two phases instead:
-
-    1. join only fixed-width columns (sha256, simhash, phash: ~3 longs/row)
-       and decide the exact / simhash / phash families exactly;
-    2. the Jaccard family can't be decided without arrays, but J >= 0.8
-       implies a tightly concentrated simhash distance (E[d] ~ 10, sd ~ 3
-       at 64 bits), so only pairs with simhash Hamming <= ``simhash_slack``
-       (generous +5 sd) proceed to the full array verify — a ~0.3% residue
-       of random pairs (E[d] = 32) — and the rest are rejected without ever
-       touching an array.
-
-    Output schema: (a, b, verified) — the edge union consumes exactly that.
-    """
-    slim = sigs.select("image_id", "sha256", "n_shingles", "simhash", "phash")
-    sa = slim.select(
-        F.col("image_id").alias("a"), F.col("sha256").alias("sha_a"),
-        F.col("n_shingles").alias("ns_a"), F.col("simhash").alias("sim_a"),
-        F.col("phash").alias("ph_a"),
-    )
-    sb = slim.select(
-        F.col("image_id").alias("b"), F.col("sha256").alias("sha_b"),
-        F.col("n_shingles").alias("ns_b"), F.col("simhash").alias("sim_b"),
-        F.col("phash").alias("ph_b"),
-    )
-    j = pairs.join(sa, "a").join(sb, "b")
-    both_captioned = (F.col("ns_a") > 0) & (F.col("ns_b") > 0)
-    ham_sim = F.bit_count(F.expr("sim_a ^ sim_b"))
-    ham_ph = F.bit_count(F.expr("ph_a ^ ph_b"))
-    cheap_pass = (F.col("sha_a") == F.col("sha_b")) | (
-        both_captioned & (ham_sim <= F.lit(cfg.simhash_hamming_max))
-    )
-    if use_phash:
-        cheap_pass = cheap_pass | (ham_ph <= F.lit(cfg.phash_hamming_max))
-    j = j.withColumn("cheap_pass", cheap_pass).withColumn(
-        "jaccard_plausible",
-        ~cheap_pass & both_captioned & (ham_sim <= F.lit(simhash_slack)),
-    )
-    direct = j.where("cheap_pass").select(
-        "a", "b", F.lit(True).alias("verified")
-    )
-    maybe = j.where("jaccard_plausible").select("a", "b")
-    full = verify_pairs(maybe, sigs, cfg)
-    jac = full.select("a", "b", F.col("f_minhash").alias("verified"))
-    return direct.unionByName(jac)
+    """The orphan-rescue candidates through the same verify as round one,
+    projected to the (a, b, verified) the edge union consumes."""
+    return verify_pairs(pairs, sigs, cfg).select("a", "b", "verified")

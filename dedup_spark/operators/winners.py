@@ -24,13 +24,3 @@ def select_winners(clusters: DataFrame) -> DataFrame:
         .withColumn("cluster_size", F.count("*").over(ws))
         .drop("rn")
     )
-
-
-def losers(winners_df: DataFrame) -> DataFrame:
-    """Redundant rows (the reference's delete candidates)."""
-    return winners_df.where(~F.col("is_winner"))
-
-
-def uniques(winners_df: DataFrame) -> DataFrame:
-    """Rows to keep: singletons + per-cluster winners (B32)."""
-    return winners_df.where(F.col("is_winner"))

@@ -8,12 +8,14 @@ run_id resumes mid-pipeline (BASELINE.json:14), verified by tests/test_resume.
 
 Stage graph (materialized checkpoints only; banding / exact edges / star
 pairs / dir digests are views recomputed from their checkpointed parent —
-cheaper than a materialization barrier):
+cheaper than a materialization barrier). t_salted … t_clusters is
+``dedup_chain``, the chain the text slice (operators.textdedup) runs too:
 
-  images ─ t_sigs ─┬─ t_salted ──────(star pairs)──┐
-   (validity fused)├─(exact edges)───────────────── ├─ t_verified ─ t_rescued
-                   └─ t_containment ────────────────┘        │
-     t_clusters ── t_winners ── t_report ◄── t_dup_dirs ◄────┘
+  images ─ t_sigs ─┬─ t_containment ───────────────────┐
+   (validity fused)├─ t_salted ─┬─ t_hamming ──────────┤
+                   │            └─(star pairs)─ t_verified ─ t_rescued ─┐
+                   ├─(exact edges)──────────────────────────── t_clusters
+                   └─ t_dup_dirs ──► t_report ◄── t_winners ◄───────┘
 """
 
 from __future__ import annotations
@@ -22,12 +24,14 @@ import logging
 import time
 from concurrent.futures import CancelledError, ThreadPoolExecutor
 from dataclasses import dataclass, field
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dedup_spark.config import DEFAULT_CONFIG, PipelineConfig
-from dedup_spark.operators import banding, cc, containment, exact, pairs as pairs_op
+from dedup_spark.operators import banding, cc, containment, exact, hamming
+from dedup_spark.operators import pairs as pairs_op
 from dedup_spark.operators import report as report_op
 from dedup_spark.operators import rollup, skew, validity, verify, winners
 from dedup_spark.sources.store import ParquetStore, StageResult, make_store
@@ -42,6 +46,73 @@ class PipelineRun:
 
     def ran(self, name: str) -> bool:
         return any(r.name == name and not r.skipped for r in self.results)
+
+
+def dedup_chain(
+    sigs: DataFrame,
+    cfg: PipelineConfig,
+    commit: Callable[[str, Callable[[], DataFrame]], DataFrame],
+    verify_fn: Callable[[DataFrame], DataFrame],
+    contain: DataFrame | None = None,
+    exact_edges: DataFrame | None = None,
+) -> DataFrame:
+    """signatures → clusters(image_id, cluster_id): the one near-dup chain,
+    shared by run_pipeline and the text slice (operators.textdedup).
+
+    salted LSH bands → exact in-bucket Hamming pairs (simhash; phash where
+    the rows have pixels) → minhash star candidates → ``verify_fn`` →
+    orphan rescue → connected components.
+
+    ``commit(name, compute)`` materializes each intermediate and returns the
+    frame to consume: the pipeline's stage store, the text slice's
+    localCheckpoint. t_salted is consumed three times (Hamming verifier,
+    star pass, orphan rescue), so it must be a real barrier. The image path
+    also passes its ``contain`` pairs (verified with the candidates and kept
+    as edges) and its ``exact_edges`` (digest groups).
+    """
+    t_salted = commit(
+        "t_salted",
+        lambda: skew.salted_bands(banding.band_table(sigs, cfg), cfg)[0],
+    )
+    # Hamming families verify EXACTLY inside their buckets — numpy popcount
+    # per salted group, no candidate rows, no rescue needed (SURVEY.md §8).
+    # Only the minhash/Jaccard family goes through star candidates + join
+    # verification + orphan rescue.
+    t_hamming = commit(
+        "t_hamming", lambda: hamming.hamming_family_pairs(t_salted, cfg=cfg)
+    )
+    mh_salted = t_salted.where(F.col("family") == "minhash")
+    cand = pairs_op.candidate_pairs(mh_salted)
+    if contain is not None:
+        cand = pairs_op.union_pairs(cand, contain)
+    t_verified = commit("t_verified", lambda: verify_fn(cand))
+
+    linked = [t_hamming] + ([exact_edges] if exact_edges is not None else [])
+    # orphan rescue (see operators.pairs): minhash-bucketed rows with
+    # candidates but zero links anywhere get one capped exhaustive round.
+    # "Judged" = verify output + links of the other families, so rows linked
+    # by ANY family are not orphans and already-found pairs aren't redone.
+    judged = t_verified.select("a", "b", "verified")
+    for df in linked:
+        judged = judged.unionByName(
+            df.select("a", "b", F.lit(True).alias("verified"))
+        )
+    nodes = sigs.select("image_id")
+    t_rescued = commit(
+        "t_rescued",
+        lambda: verify.rescue_verify_pairs(
+            pairs_op.orphan_rescue_pairs(mh_salted, judged, node_ids=nodes),
+            sigs, cfg,
+        ),
+    )
+
+    # connected_components dedups the union itself
+    edges = verify.verified_edges(t_verified).unionByName(
+        verify.verified_edges(t_rescued)
+    )
+    for df in linked + ([contain] if contain is not None else []):
+        edges = edges.unionByName(df.select("a", "b"))
+    return commit("t_clusters", lambda: cc.connected_components(edges, nodes))
 
 
 def run_pipeline(
@@ -272,47 +343,6 @@ def run_pipeline(
             ),
         )
 
-        # Cheap derivations of an already-materialized stage stay VIEWS: every
-        # extra stage table costs a write + read + metrics job (and at cluster
-        # scale, real storage I/O); checkpoints belong at expensive-to-recompute
-        # or multiply-consumed points only. banding is a posexplode of t_sigs,
-        # exact edges one groupBy of it — both recompute in less time than a
-        # materialization barrier costs.
-        t_exact_edges = exact.exact_edges(t_sigs)
-
-        # t_salted IS a checkpoint: it carries the banding+salt shuffle and is
-        # consumed three times (hamming verifier, star pass, orphan rescue).
-        # The skew report is derived FROM the materialized table afterwards —
-        # one tiny groupBy over committed parquet instead of re-running banding.
-        def _salted():
-            salted, _ = skew.salted_bands(banding.band_table(t_sigs, cfg), cfg)
-            return salted
-
-        t_salted = stage("t_salted", _salted)
-        stage_async(
-            "t_skew_report",
-            lambda: skew.skew_report_from_salted(t_salted, cfg),
-            # durable approximation census: candidate pairs forfeited to salting
-            census=(
-                "salting_lost_pairs",
-                lambda out, rows: out.agg(F.sum("est_lost_pairs")).collect()[0][0]
-                or 0,
-            ),
-        )
-
-        # Hamming families (simhash, phash) verify EXACTLY inside their buckets —
-        # numpy popcount per salted group, no candidate rows, no rescue needed
-        # (operators.hamming; SURVEY.md §8). Only the minhash/Jaccard family
-        # goes through star candidates + join verification + orphan rescue.
-        from dedup_spark.operators import hamming
-
-        t_hamming = stage(
-            "t_hamming", lambda: hamming.hamming_family_pairs(t_salted, cfg=cfg)
-        )
-
-        mh_salted = t_salted.where(F.col("family") == "minhash")
-        t_cand = pairs_op.candidate_pairs(mh_salted)
-
         def _containment():
             pair_df, skipped = containment.containment_stage(t_sigs, cfg)
             # durable census: anchor-gram groups dropped by the group cap —
@@ -345,61 +375,51 @@ def run_pipeline(
             run.results.append(StageResult("t_containment_skipped", -1, skipped=True))
 
         slack_census: dict[str, int] = {}
-        t_verified = stage(
-            "t_verified",
-            lambda: verify.verify_pairs(
-                pairs_op.union_pairs(t_cand, t_contain), t_sigs, cfg,
-                census=slack_census,
+
+        def commit(name: str, compute) -> DataFrame:
+            if name == "t_verified":
+                # durable census: captioned pairs the simhash slack gate kept
+                # away from the exact-Jaccard verify. verify_pairs fills
+                # slack_census EAGERLY (the count runs inside the compute), so
+                # the value is ready when store.write's census hook fires; it
+                # is NOT recomputable from the committed output, hence
+                # census_on_skip=False.
+                return stage(
+                    name, compute,
+                    census=(
+                        "verify_slack_skips",
+                        lambda out, rows: slack_census.get("slack_skips", 0),
+                    ),
+                    census_on_skip=False,
+                )
+            out = stage(name, compute)
+            if name == "t_salted":
+                # the skew report is derived FROM the committed salted table —
+                # one tiny groupBy over parquet instead of re-running banding
+                stage_async(
+                    "t_skew_report",
+                    lambda: skew.skew_report_from_salted(out, cfg),
+                    # durable approximation census: candidate pairs forfeited
+                    # to salting
+                    census=(
+                        "salting_lost_pairs",
+                        lambda rep, rows: rep.agg(
+                            F.sum("est_lost_pairs")
+                        ).collect()[0][0] or 0,
+                    ),
+                )
+            return out
+
+        # exact edges stay a VIEW: one groupBy of t_sigs recomputes in less
+        # time than a materialization barrier costs
+        t_clusters = dedup_chain(
+            t_sigs, cfg, commit,
+            lambda pairs: verify.verify_pairs(
+                pairs, t_sigs, cfg, census=slack_census
             ),
-            # durable census: captioned pairs the simhash slack gate kept away
-            # from the exact-Jaccard verify. verify_pairs fills slack_census
-            # EAGERLY (the count runs inside the compute), so the value is ready
-            # when store.write's census hook fires; it is NOT recomputable from
-            # the committed output, hence census_on_skip=False.
-            census=(
-                "verify_slack_skips",
-                lambda out, rows: slack_census.get("slack_skips", 0),
-            ),
-            census_on_skip=False,
+            contain=t_contain,
+            exact_edges=exact.exact_edges(t_sigs),
         )
-
-        # orphan rescue (see operators.pairs): minhash-bucketed rows with
-        # candidates but zero links anywhere get one capped exhaustive round.
-        # "Judged" = verify output + hamming pairs + exact edges, so rows linked
-        # by ANY family are not orphans and already-found pairs aren't redone.
-        def _judged():
-            true_col = F.lit(True).alias("verified")
-            return (
-                t_verified.select("a", "b", "verified")
-                .unionByName(t_hamming.select("a", "b", true_col))
-                .unionByName(t_exact_edges.select("a", "b", true_col))
-            )
-
-        t_rescued = stage(
-            "t_rescued",
-            lambda: verify.rescue_verify_pairs(
-                pairs_op.orphan_rescue_pairs(
-                    mh_salted, _judged(), node_ids=t_sigs.select("image_id")
-                ),
-                t_sigs, cfg,
-            ),
-        )
-
-        def _edges():
-            return (
-                verify.verified_edges(t_verified)
-                .unionByName(verify.verified_edges(t_rescued))
-                .unionByName(t_hamming.select("a", "b"))
-                .unionByName(t_exact_edges.select("a", "b"))
-                .unionByName(t_contain.select("a", "b"))
-                .dropDuplicates(["a", "b"])
-            )
-
-        def _clusters():
-            nodes = t_sigs.select("image_id")
-            return cc.connected_components(_edges(), nodes)
-
-        t_clusters = stage("t_clusters", _clusters)
 
         t_winners = stage("t_winners", lambda: winners.select_winners(t_clusters))
 
@@ -425,11 +445,4 @@ def run_pipeline(
     return run
 
 
-def cluster_table(spark: SparkSession, store_root: str) -> DataFrame:
-    """Convenience: read the final cluster assignment of a finished run."""
-    return spark.read.parquet(f"{store_root}/t_winners")
-
-
-__all__ = ["run_pipeline", "PipelineRun", "cluster_table"]
-
-_ = F  # imported for future per-stage expressions
+__all__ = ["run_pipeline", "dedup_chain", "PipelineRun"]

@@ -80,10 +80,8 @@ class ParquetStore:
         implies census-present, so a driver crash between the data commit and
         the census can never leave a resumable stage whose approximation
         accounting is permanently missing."""
-        path = self._table_dir(name)
-        df.write.mode("overwrite").parquet(path)
         spark = df.sparkSession
-        out = spark.read.parquet(path)
+        out, extra = self._commit_table(name, df)
         rows = self._write_metrics(name, out)
         if census is not None:
             cname, fn = census
@@ -94,6 +92,7 @@ class ParquetStore:
             "fingerprint": self.fingerprint,
             "status": "done",
             "rows": rows,
+            **extra,
         }
         # atomic rename so a crash mid-write can never look "done"
         fd, tmp = tempfile.mkstemp(dir=self.root, suffix=".manifest.tmp")
@@ -102,6 +101,12 @@ class ParquetStore:
         os.replace(tmp, self._manifest(name))
         self._append_lineage(manifest)
         return StageResult(name, rows, skipped=False)
+
+    def _commit_table(self, name: str, df: DataFrame) -> tuple[DataFrame, dict]:
+        """Write the stage table → (committed table, extra manifest keys)."""
+        path = self._table_dir(name)
+        df.write.mode("overwrite").parquet(path)
+        return df.sparkSession.read.parquet(path), {}
 
     def manifest_rows(self, name: str) -> int:
         """Committed row count of a done stage (from its manifest)."""
@@ -239,39 +244,20 @@ class ParquetStore:
 class IcebergStore(ParquetStore):
     """Iceberg-backed variant: stage tables become real Iceberg tables.
 
-    Inherits manifest/lineage bookkeeping; the data path switches to
-    ``writeTo().createOrReplace()`` so every stage commit is an Iceberg
-    snapshot (atomic, time-travelable). Only usable when the session has the
+    Inherits write() — census, manifest and lineage bookkeeping; only the
+    table commit (``writeTo().createOrReplace()``, so every stage commit is
+    an Iceberg snapshot: atomic, time-travelable) and read differ, and the
+    manifest also names the table. Only usable when the session has the
     Iceberg runtime (not this sandbox — SURVEY.md §7.0)."""
 
     def __init__(self, catalog_ns: str, root: str, run_id: str, fingerprint: str):
         super().__init__(root, run_id, fingerprint)
         self.catalog_ns = catalog_ns
 
-    def write(self, name: str, df: DataFrame,
-              census: tuple | None = None) -> StageResult:
+    def _commit_table(self, name: str, df: DataFrame) -> tuple[DataFrame, dict]:
         tbl = f"{self.catalog_ns}.{name}"
         df.writeTo(tbl).createOrReplace()
-        spark = df.sparkSession
-        out = spark.read.table(tbl)
-        rows = self._write_metrics(name, out)
-        if census is not None:  # same census-before-manifest contract
-            cname, fn = census
-            self.record_census(cname, fn(out, rows), spark)
-        manifest = {
-            "stage": name,
-            "run_id": self.run_id,
-            "fingerprint": self.fingerprint,
-            "status": "done",
-            "rows": rows,
-            "table": tbl,
-        }
-        fd, tmp = tempfile.mkstemp(dir=self.root, suffix=".manifest.tmp")
-        with os.fdopen(fd, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self._manifest(name))
-        self._append_lineage(manifest)
-        return StageResult(name, rows, skipped=False)
+        return df.sparkSession.read.table(tbl), {"table": tbl}
 
     def read(self, spark: SparkSession, name: str) -> DataFrame:
         return spark.read.table(f"{self.catalog_ns}.{name}")

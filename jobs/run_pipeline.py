@@ -34,6 +34,21 @@ if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
 
+def table_token(spark, images, name: str) -> str:
+    """Resume identity of an --input table: its name plus the path, size and
+    mtime of every file it reads, so an input rewritten in place under the
+    same name never reuses checkpoints computed from the old files."""
+    import hashlib
+
+    jvm, conf = spark._jvm, spark._jsc.hadoopConfiguration()
+    h = hashlib.sha256()
+    for f in sorted(images.inputFiles()):
+        path = jvm.org.apache.hadoop.fs.Path(f)
+        st = path.getFileSystem(conf).getFileStatus(path)
+        h.update(f"{f}|{st.getLen()}|{st.getModificationTime()}\n".encode())
+    return f"table:{name}:{h.hexdigest()}"
+
+
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(description="dedup_spark full pipeline")
     src = p.add_mutually_exclusive_group(required=True)
@@ -84,7 +99,7 @@ def main(argv: list[str] | None = None) -> int:
         else:
             images = spark.read.table(args.input)
         n_input = None
-        input_token = f"table:{args.input}"
+        input_token = table_token(spark, images, args.input)
 
     prior_sigs = None
     if args.prior_store:

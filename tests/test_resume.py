@@ -196,3 +196,25 @@ def test_async_stage_failure_surfaces_and_resumes(spark, tmp_path, monkeypatch):
     recomputed = {r.name for r in run2.results if not r.skipped}
     assert recomputed == {"t_dir_report"}
     assert spark.read.parquet(f"{root}/t_dir_report").count() >= 0
+
+
+def test_rewritten_input_recomputes_signatures(spark, tmp_path):
+    """--input resume identity covers the input's files, not just its name:
+    a parquet input rewritten in place under the same path must not reuse
+    checkpoints computed from the old files."""
+    from jobs.run_pipeline import table_token
+
+    src = str(tmp_path / "input")
+    root = str(tmp_path / "rewrite_store")
+    gen_images(spark, 120, 7).write.parquet(src)
+    images = spark.read.parquet(src)
+    token = table_token(spark, images, src)
+    assert token == table_token(spark, spark.read.parquet(src), src)
+    run_pipeline(spark, images, root, run_id="ri", input_token=token)
+
+    gen_images(spark, 120, 8).write.mode("overwrite").parquet(src)
+    images = spark.read.parquet(src)
+    token2 = table_token(spark, images, src)
+    assert token2 != token
+    run = run_pipeline(spark, images, root, run_id="ri", input_token=token2)
+    assert not next(r for r in run.results if r.name == "t_sigs").skipped
