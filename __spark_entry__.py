@@ -394,11 +394,13 @@ def _docs_levenshtein_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # candidates are BLOCKED on (source, ±32-char length band) so the self-
     # join is O(block²) per block, never corpus² — the standard blocking +
     # verify layout for edit-distance dedup; the verify itself is the JVM
-    # levenshtein built-in (codegen'd, no UDF). The length band is also a
-    # correctness-preserving prune for the ≤64 threshold: an edit distance
-    # ≤ 64 is impossible when lengths differ by more than 64, and 32 is the
-    # fixture-calibrated band that keeps every qualifying pair (abs-diff of
-    # all 22 oracle-scale pairs ≤ 32) while cutting candidates ~3×.
+    # levenshtein built-in (codegen'd, no UDF). The ±32 length band is
+    # FIXTURE-CALIBRATED, part of this family's definition (the DuckDB twin
+    # uses the same band), not a lossless prune: only a ±64 band is provably
+    # lossless for the ≤64 threshold (an edit distance ≤ 64 is impossible
+    # when lengths differ by more than 64). ±32 keeps every qualifying pair
+    # of the oracle-scale fixture (abs-diff of all 22 pairs ≤ 32) while
+    # cutting candidates ~3×; a pair with length gap in (32, 64] is missed.
     d = _docs(spark, sf_dir).select("doc_id", "source", "n_chars", "text")
     a, b = d.alias("a"), d.alias("b")
     dist = F.levenshtein(F.col("a.text"), F.col("b.text"))

@@ -62,9 +62,9 @@ def run_bench(cpus: int | None = None, sf_dir: str | None = None,
     try:
         from dedup_spark.plans.pipeline import run_pipeline
 
-        # input generated OUTSIDE the timed window (same protocol as
-        # jobs/bench_scaling.py): the north metric is dedup throughput over
-        # an EXISTING table — generation is test scaffolding
+        # input generated OUTSIDE the timed window: the north metric is
+        # dedup throughput over an EXISTING table — generation is test
+        # scaffolding
         input_path = f"{root}/t_input"
         gen_images(spark, bench_n, BENCH_SEED).write.mode("overwrite").parquet(
             input_path

@@ -51,12 +51,6 @@ class PipelineConfig:
                                        # ≥ suffix_gram_q + suffix_window − 1
     suffix_gram_q: int = 24            # gram size (bytes of caption_norm)
     suffix_window: int = 9            # winnowing window (in grams)
-    # anchor-key join strategy: broadcast the (one-row-per-eligible-doc)
-    # anchor-key side only while its ROW COUNT stays under this; above it
-    # (10^10+ docs: tens of GB of keys) fall through to a plain shuffled
-    # semi-join — same plan shape, no plan-time OOM. A knob, not a code edit
-    # (VERDICT r2 "What's wrong" #1).
-    containment_broadcast_max: int = 20_000_000
 
     # --- LSH skew handling ---
     bucket_cap: int = 64               # members before salting kicks in
@@ -68,21 +62,9 @@ class PipelineConfig:
     # --- winner selection: (prefix depth asc, image_id asc) ---
     winner_order: tuple = field(default=("depth", "image_id"))
 
-    # Knobs that only change the PHYSICAL plan (join strategy, parallelism),
-    # never any output value, are excluded from the resume fingerprint:
-    # toggling the advertised huge-corpus escape hatch must not invalidate
-    # every checkpoint and force a full recompute (ADVICE r3).
-    _PLAN_ONLY_KNOBS = frozenset({"containment_broadcast_max"})
-
     def fingerprint(self) -> str:
-        """sha256 of the canonical JSON of this config (resume safety key).
-
-        Plan-only knobs (``_PLAN_ONLY_KNOBS``) are excluded: both plan
-        shapes are tested output-identical (tests/test_suffix.py), so they
-        cannot affect what a checkpointed stage contains."""
+        """sha256 of the canonical JSON of this config (resume safety key)."""
         d = asdict(self)
-        for k in self._PLAN_ONLY_KNOBS:
-            d.pop(k, None)
         d["winner_order"] = list(d["winner_order"])
         blob = json.dumps(d, sort_keys=True, separators=(",", ":"))
         return hashlib.sha256(blob.encode("utf-8")).hexdigest()

@@ -47,6 +47,13 @@ from dedup_spark.config import DEFAULT_CONFIG, PipelineConfig
 from dedup_spark.functions.hashing import to_signed64
 from dedup_spark.functions.minhash import splitmix64
 
+# anchor-key join strategy: broadcast the (one-row-per-eligible-doc)
+# anchor-key side only while the doc count stays under this; above it
+# (10^10+ docs: tens of GB of keys) fall through to a plain shuffled
+# semi-join — same output, no plan-time OOM (tests/test_suffix.py pins both
+# plans to the same pairs).
+BROADCAST_MAX_DOCS = 20_000_000
+
 _GRAMS_SCHEMA = StructType(
     [
         StructField("image_id", StringType(), False),
@@ -169,7 +176,8 @@ def containment_candidates(
     gram_df: DataFrame,
     cfg: PipelineConfig = DEFAULT_CONFIG,
     group_cap: int = 1000,
-    n_docs_hint: int | None = None,
+    *,
+    n_docs: int,
 ) -> tuple[DataFrame, DataFrame]:
     """→ (group membership rows, skipped-group log).
 
@@ -180,27 +188,17 @@ def containment_candidates(
     docs are members of their own anchor group by construction: a doc's
     anchor is one of its own winnowed grams).
 
-    The anchor-key side is one slim row per eligible doc; while its row
-    count stays under ``cfg.containment_broadcast_max`` it is BROADCAST so
-    the big winnowed index is never shuffled for this join. Above the knob
-    (10^10+ docs — a broadcast of tens of GB would die at plan time) the
-    hint is dropped and the same join runs as a plain shuffled semi-join:
-    identical output, one extra shuffle of the index. The gate bounds
-    anchor rows from above — by ``n_docs_hint`` (≤ 1 anchor per doc) when
-    the caller supplies it, else by counting anchor rows on the
-    caller-materialized gram_df; distinct keys ≤ rows either way, so the
-    gate is conservative (it can only fall back to the shuffle plan early,
-    never broadcast something oversized).
+    The anchor-key side is one slim row per eligible doc; while ``n_docs``
+    stays under ``BROADCAST_MAX_DOCS`` it is BROADCAST so the big winnowed
+    index is never shuffled for this join. Above it (10^10+ docs — a
+    broadcast of tens of GB would die at plan time) the hint is dropped and
+    the same join runs as a plain shuffled semi-join: identical output, one
+    extra shuffle of the index. Distinct anchor keys ≤ anchors ≤ n_docs
+    (≤ 1 anchor per doc), so the gate is conservative: it can only fall
+    back to the shuffle plan early, never broadcast something oversized.
     """
-    anchors = gram_df.where("is_anchor")
-    anchor_keys = anchors.select("gram").distinct()
-    if n_docs_hint is None:
-        # no doc count from the caller: count the anchor rows themselves —
-        # one scan of the caller-materialized index. containment_stage
-        # passes sigs.count() instead (anchors ≤ 1 per doc; on a committed
-        # stage table that count is a footer-metadata job)
-        n_docs_hint = gram_df.where("is_anchor").count()
-    if n_docs_hint <= cfg.containment_broadcast_max:
+    anchor_keys = gram_df.where("is_anchor").select("gram").distinct()
+    if n_docs <= BROADCAST_MAX_DOCS:
         anchor_keys = F.broadcast(anchor_keys)
     # checkpoint the PRUNED membership (a small fraction of the index): it
     # is consumed twice below (size census + viable filter)
@@ -363,6 +361,6 @@ def containment_stage(
     """
     gi = gram_index(sigs, cfg).localCheckpoint()
     membership, skipped = containment_candidates(
-        gi, cfg, group_cap, n_docs_hint=sigs.count()
+        gi, cfg, group_cap, n_docs=sigs.count()
     )
     return containment_pairs_df(membership, sigs, cfg), skipped

@@ -47,7 +47,7 @@ def verify_pairs(
     The slack gate is an approximation (simhash is a random projection: a
     true J >= threshold pair with an atypical shingle count can land beyond
     +5 sd), so its skip count is CENSUSED — one cheap count over the
-    checkpointed phase-1 frame, logged like the salting loss census
+    checkpointed phase-1 frame, recorded like the salting loss census
     (operators.skew) — rather than silently assumed negligible (ADVICE r2).
     """
     slim = sigs.select("image_id", "sha256", "n_shingles", "simhash", "phash")
@@ -78,8 +78,8 @@ def verify_pairs(
         F.col("both_captioned") & (F.col("hamming_sim") > simhash_slack)
     ).count()
     if census is not None:
-        # out-param so the pipeline can persist the census into t_metrics
-        # (VERDICT r3 #5: logs die with the driver; metrics rows survive)
+        # out-param so the pipeline can persist the census in the stage
+        # manifest (VERDICT r3 #5: logs die with the driver; manifests stay)
         census["slack_skips"] = int(n_slack_skipped)
     if n_slack_skipped:
         log.warning(

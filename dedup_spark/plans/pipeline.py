@@ -44,9 +44,6 @@ class PipelineRun:
     store: ParquetStore
     results: list[StageResult] = field(default_factory=list)
 
-    def ran(self, name: str) -> bool:
-        return any(r.name == name and not r.skipped for r in self.results)
-
 
 def dedup_chain(
     sigs: DataFrame,
@@ -164,71 +161,49 @@ def run_pipeline(
     store = make_store(spark, store_root, run_id, fp)
     run = PipelineRun(store=store)
 
-    def stage(name: str, compute, census=None, census_on_skip=True) -> DataFrame:
-        """``census=(census_name, fn)``: fn(committed_df, rows) is recorded
-        into t_metrics by store.write BEFORE the manifest rename, so a done
-        stage always has its approximation census (ADVICE r4). On a SKIP the
-        row normally already exists (same run_id ⇒ same census file); if it
-        does not — a store committed by pre-r5 code whose crash window this
-        ordering closes — it is backfilled from the committed table, unless
-        ``census_on_skip`` is False (censuses like the verify slack count
-        that are only observable while the stage computes)."""
-        if store.is_done(name):
-            if (
-                census is not None
-                and census_on_skip
-                and not store.has_census(census[0], spark)
-            ):
-                cname, fn = census
-                store.record_census(
-                    cname,
-                    fn(store.read(spark, name), store.manifest_rows(name)),
-                    spark,
-                )
-            run.results.append(StageResult(name, -1, skipped=True))
-            return store.read(spark, name)
-        t0 = time.perf_counter()
-        df = compute()
-        res = store.write(name, df, census=census)
-        res.seconds = round(time.perf_counter() - t0, 2)
-        run.results.append(res)
-        return store.read(spark, name)
-
-    # Leaf DIAGNOSTIC stages (nothing downstream consumes them) run on a
-    # small thread pool, concurrent with the main chain (VERDICT r3 #3):
-    # Spark schedules jobs submitted from multiple threads task-by-task, so
-    # these thin jobs fill the executor slots the big stages leave idle at
-    # their tails instead of each paying a serial commit barrier — at 16
-    # cores the four diagnostics were ~8-9 s of the fixed residue that
-    # capped scaling efficiency at mid input sizes. Results are appended
-    # after the main chain finishes (stable submission order); any failure
-    # re-raises at the join point.
+    # Leaf DIAGNOSTIC stages (nothing downstream consumes them) run in the
+    # BACKGROUND on a small thread pool, concurrent with the main chain
+    # (VERDICT r3 #3): Spark schedules jobs submitted from multiple threads
+    # task-by-task, so these thin jobs fill the executor slots the big
+    # stages leave idle at their tails instead of each paying a serial
+    # commit barrier — at 16 cores the four diagnostics were ~8-9 s of the
+    # fixed residue that capped scaling efficiency at mid input sizes. Their
+    # results are appended after the main chain finishes (stable submission
+    # order); any failure re-raises at the join point.
     pool = ThreadPoolExecutor(max_workers=3)
     async_stages: list[tuple[str, object]] = []  # (name, Future | StageResult)
 
-    def stage_async(name: str, compute, census=None) -> None:
-        """``census`` follows the same census-before-manifest contract as
-        stage(): recorded inside store.write when the stage RAN; on a skip
-        the same-run_id census row normally already stands (backfilled from
-        the committed table when it does not — pre-r5 stores)."""
+    def stage(
+        name: str, compute, census=None, background=False
+    ) -> DataFrame | None:
+        """The one stage commit: SKIP if the store says ``name`` is done,
+        else compute → store.write, on the pool when ``background`` (then
+        nothing is returned; the result joins run.results at join_async),
+        else inline, returning the committed table.
+
+        ``census=(census_name, fn)``: store.write puts fn(committed_df, rows)
+        into the stage's manifest, so a done stage always carries its
+        approximation census and a skipped one needs nothing more.
+
+        is_done runs on the calling thread and store.write on the thread
+        that runs the job: that is how perfbench.trace tells background
+        stages from inline ones."""
         if store.is_done(name):
-            if census is not None and not store.has_census(census[0], spark):
-                cname, fn = census
-                store.record_census(
-                    cname,
-                    fn(store.read(spark, name), store.manifest_rows(name)),
-                    spark,
-                )
-            async_stages.append((name, StageResult(name, -1, skipped=True)))
-            return
+            res = StageResult(name, -1, skipped=True)
+        else:
 
-        def job() -> StageResult:
-            t0 = time.perf_counter()
-            res = store.write(name, compute(), census=census)
-            res.seconds = round(time.perf_counter() - t0, 2)
-            return res
+            def job() -> StageResult:
+                t0 = time.perf_counter()
+                res = store.write(name, compute(), census=census)
+                res.seconds = round(time.perf_counter() - t0, 2)
+                return res
 
-        async_stages.append((name, pool.submit(job)))
+            res = pool.submit(job) if background else job()
+        if background:
+            async_stages.append((name, res))
+            return None
+        run.results.append(res)
+        return store.read(spark, name)
 
     def join_async(failed: bool = False) -> None:
         """Collect async-stage results and reap the pool. On the FAILURE
@@ -336,77 +311,58 @@ def run_pipeline(
         # invalid-row diagnostics (S9 analog) by thin anti-join against the
         # signature ids: reads ONLY pruned metadata columns of the input — the
         # payload is scanned exactly once in this pipeline, by t_sigs above
-        stage_async(
+        stage(
             "t_invalid",
             lambda: images.select("image_id", "w", "h", "fmt").join(
                 t_sigs.select("image_id"), "image_id", "left_anti"
             ),
+            background=True,
         )
 
-        def _containment():
+        # censuses counted EAGERLY inside a stage's compute, so they are ready
+        # when its store.write census hook fires: the anchor-gram groups
+        # containment dropped at its group cap, and verify_pairs' count of
+        # captioned pairs the simhash slack gate kept away from the
+        # exact-Jaccard verify
+        censuses: dict[str, int] = {}
+
+        def _containment() -> DataFrame:
             pair_df, skipped = containment.containment_stage(t_sigs, cfg)
-            # durable census: anchor-gram groups dropped by the group cap —
-            # recorded by store.write before the nested stage's manifest, so a
-            # "done" nested stage always carries it (ADVICE r4)
-            stage(
-                "t_containment_skipped",
-                lambda: skipped,
-                census=("containment_skipped_groups", lambda out, rows: rows),
-            )
+            censuses["containment_skipped_groups"] = skipped.count()
             return pair_df
 
-        t_contain = stage("t_containment", _containment)
-        if not any(
-            r.name == "t_containment_skipped" for r in run.results
-        ) and store.is_done("t_containment_skipped"):
-            # the nested stage only executes inside the parent's compute, so on
-            # a resume it never reaches run.results even though it exists in the
-            # store and was skipped — record the skip so resume reports are
-            # faithful (ADVICE r3). Its census row normally stands (same
-            # run_id); backfill from the manifest when it does not — the
-            # nested stage() call above never runs on this path, so its own
-            # skip-backfill cannot fire (ADVICE r4 legacy-store window).
-            if not store.has_census("containment_skipped_groups", spark):
-                store.record_census(
-                    "containment_skipped_groups",
-                    store.manifest_rows("t_containment_skipped"),
-                    spark,
-                )
-            run.results.append(StageResult("t_containment_skipped", -1, skipped=True))
-
-        slack_census: dict[str, int] = {}
+        t_contain = stage(
+            "t_containment", _containment,
+            census=(
+                "containment_skipped_groups",
+                lambda out, rows: censuses["containment_skipped_groups"],
+            ),
+        )
 
         def commit(name: str, compute) -> DataFrame:
             if name == "t_verified":
-                # durable census: captioned pairs the simhash slack gate kept
-                # away from the exact-Jaccard verify. verify_pairs fills
-                # slack_census EAGERLY (the count runs inside the compute), so
-                # the value is ready when store.write's census hook fires; it
-                # is NOT recomputable from the committed output, hence
-                # census_on_skip=False.
                 return stage(
                     name, compute,
                     census=(
                         "verify_slack_skips",
-                        lambda out, rows: slack_census.get("slack_skips", 0),
+                        lambda out, rows: censuses["slack_skips"],
                     ),
-                    census_on_skip=False,
                 )
             out = stage(name, compute)
             if name == "t_salted":
                 # the skew report is derived FROM the committed salted table —
                 # one tiny groupBy over parquet instead of re-running banding
-                stage_async(
+                stage(
                     "t_skew_report",
                     lambda: skew.skew_report_from_salted(out, cfg),
-                    # durable approximation census: candidate pairs forfeited
-                    # to salting
+                    # candidate pairs forfeited to salting
                     census=(
                         "salting_lost_pairs",
                         lambda rep, rows: rep.agg(
                             F.sum("est_lost_pairs")
                         ).collect()[0][0] or 0,
                     ),
+                    background=True,
                 )
             return out
 
@@ -415,7 +371,7 @@ def run_pipeline(
         t_clusters = dedup_chain(
             t_sigs, cfg, commit,
             lambda pairs: verify.verify_pairs(
-                pairs, t_sigs, cfg, census=slack_census
+                pairs, t_sigs, cfg, census=censuses
             ),
             contain=t_contain,
             exact_edges=exact.exact_edges(t_sigs),
@@ -432,7 +388,10 @@ def run_pipeline(
             return report_op.image_report(t_winners, sup)
 
         stage("t_report", _report)
-        stage_async("t_dir_report", lambda: report_op.dir_report(t_dup_dirs))
+        stage(
+            "t_dir_report", lambda: report_op.dir_report(t_dup_dirs),
+            background=True,
+        )
     except BaseException:
         # a synchronous stage raised: reap the async pool NOW so its
         # non-daemon workers cannot keep running Spark jobs after the

@@ -12,10 +12,12 @@ Two backends behind one interface:
   (no Iceberg jar on disk, SURVEY.md §7.0). A stage is "done" iff its
   manifest exists and its config fingerprint matches.
 
-Both record lineage rows (stage, run_id, fingerprint, status, rows) and
-per-partition metrics (stage, partition_id, rows) — metrics are computed
-from the MATERIALIZED output via spark_partition_id so they cost one cheap
-scan of already-columnar data, never a recompute of the stage.
+Only the stage TABLES go through Spark. Manifests, the lineage log and the
+approximation censuses (carried inside each stage's manifest) are small
+files the driver writes under the store root, which must therefore be
+driver-local. Per-partition metrics (stage, partition_id, rows) come from
+the MATERIALIZED output — the parquet footers where the driver can read
+them, else one Spark aggregate — never a recompute of the stage.
 """
 
 from __future__ import annotations
@@ -75,17 +77,12 @@ class ParquetStore:
               census: tuple | None = None) -> StageResult:
         """Materialize a stage idempotently; returns rows written.
 
-        ``census=(census_name, fn)`` records ``fn(committed_df, rows)`` into
-        t_metrics BEFORE the manifest rename (ADVICE r4): "done" therefore
-        implies census-present, so a driver crash between the data commit and
-        the census can never leave a resumable stage whose approximation
-        accounting is permanently missing."""
-        spark = df.sparkSession
+        ``census=(census_name, fn)`` stores ``fn(committed_df, rows)`` in the
+        manifest as ``"census": {census_name: value}``. The manifest rename
+        is the commit, so "done" implies census-present and the lineage log
+        (which appends every manifest) is the one recall-budget view."""
         out, extra = self._commit_table(name, df)
         rows = self._write_metrics(name, out)
-        if census is not None:
-            cname, fn = census
-            self.record_census(cname, fn(out, rows), spark)
         manifest = {
             "stage": name,
             "run_id": self.run_id,
@@ -94,6 +91,9 @@ class ParquetStore:
             "rows": rows,
             **extra,
         }
+        if census is not None:
+            cname, fn = census
+            manifest["census"] = {cname: int(fn(out, rows))}
         # atomic rename so a crash mid-write can never look "done"
         fd, tmp = tempfile.mkstemp(dir=self.root, suffix=".manifest.tmp")
         with os.fdopen(fd, "w") as f:
@@ -108,11 +108,6 @@ class ParquetStore:
         df.write.mode("overwrite").parquet(path)
         return df.sparkSession.read.parquet(path), {}
 
-    def manifest_rows(self, name: str) -> int:
-        """Committed row count of a done stage (from its manifest)."""
-        with open(self._manifest(name)) as f:
-            return int(json.load(f).get("rows", -1))
-
     def read(self, spark: SparkSession, name: str) -> DataFrame:
         return spark.read.parquet(self._table_dir(name))
 
@@ -121,62 +116,6 @@ class ParquetStore:
         path = os.path.join(self.root, "t_lineage.jsonl")
         with _LINEAGE_LOCK, open(path, "a") as f:
             f.write(json.dumps(manifest) + "\n")
-
-    def record_census(self, name: str, value: int, spark=None) -> None:
-        """One approximation-census row per run into t_metrics (VERDICT r3
-        #5): salting loss, verify slack-gate skips, containment skipped
-        groups. Logged censuses vanish with the driver; a metrics row
-        survives resume/remote runs, so the recall accounting is durable.
-        Schema matches the per-partition metrics rows (partition_id -1 marks
-        a run-level census)."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        stage = f"census_{name}"
-        mdir = os.path.join(self.root, "t_metrics")
-        if os.path.isdir(self.root):
-            os.makedirs(mdir, exist_ok=True)
-            tbl = pa.table(
-                {
-                    "partition_id": pa.array([-1], pa.int32()),
-                    "rows_out": pa.array([int(value)], pa.int64()),
-                    "stage": pa.array([stage]),
-                    "run_id": pa.array([self.run_id]),
-                }
-            )
-            pq.write_table(tbl, os.path.join(mdir, f"{stage}-{self.run_id}.parquet"))
-            return
-        if spark is None:  # non-local root needs a session to append
-            raise ValueError("record_census on a non-local root requires spark")
-        spark.createDataFrame(
-            [(-1, int(value), stage, self.run_id)],
-            "partition_id int, rows_out long, stage string, run_id string",
-        ).write.mode("append").parquet(mdir)
-
-    def has_census(self, name: str, spark: SparkSession | None = None) -> bool:
-        """Whether this run's census row for ``name`` is already durable.
-        Used by the resume path to backfill censuses for stores committed
-        by older code, where the manifest could predate the census row
-        (ADVICE r4 crash window — closed going forward by write() ordering)."""
-        stage = f"census_{name}"
-        mdir = os.path.join(self.root, "t_metrics")
-        if os.path.isdir(self.root):
-            return os.path.exists(
-                os.path.join(mdir, f"{stage}-{self.run_id}.parquet")
-            )
-        if spark is None:
-            return False
-        try:
-            return bool(
-                spark.read.parquet(mdir)
-                .where(
-                    (F.col("stage") == stage) & (F.col("run_id") == self.run_id)
-                )
-                .limit(1)
-                .count()
-            )
-        except Exception:
-            return False
 
     def lineage(self) -> list[dict]:
         path = os.path.join(self.root, "t_lineage.jsonl")
@@ -244,7 +183,7 @@ class ParquetStore:
 class IcebergStore(ParquetStore):
     """Iceberg-backed variant: stage tables become real Iceberg tables.
 
-    Inherits write() — census, manifest and lineage bookkeeping; only the
+    Inherits write() — manifest (census included) and lineage; only the
     table commit (``writeTo().createOrReplace()``, so every stage commit is
     an Iceberg snapshot: atomic, time-travelable) and read differ, and the
     manifest also names the table. Only usable when the session has the

@@ -57,6 +57,33 @@ def test_mid_pipeline_resume_recomputes_only_downstream(spark, first_run):
     assert report1.equals(report2)
 
 
+def test_recomputed_stage_rewrites_its_census(spark, first_run):
+    """A census rides in its stage's manifest, so a lost manifest loses
+    exactly one stage: the rerun recomputes ONLY t_verified and commits the
+    same verify slack-gate census again. (Runs before the config-change
+    test, which rewrites this store under another run_id.)"""
+    root, _, _ = first_run
+    mf = os.path.join(root, "t_verified.manifest.json")
+    with open(mf) as f:
+        before = json.load(f)["census"]
+    os.remove(mf)
+    images = gen_images(spark, N, 7)
+    run = run_pipeline(spark, images, root, run_id="rr")
+    assert {r.name for r in run.results if not r.skipped} == {"t_verified"}
+    with open(mf) as f:
+        assert json.load(f)["census"] == before
+
+
+def test_stage_names_match_benchmark_ledger(first_run):
+    """The benchmark's per-stage ledger (perfbench.trace.STAGES) names every
+    stage run_pipeline commits; a renamed or added stage must fail here
+    rather than silently fall out of the ledger."""
+    from perfbench.trace import STAGES
+
+    _, run, _ = first_run
+    assert {r.name for r in run.results} == set(STAGES)
+
+
 def test_config_change_invalidates_checkpoints(spark, first_run):
     root, _, _ = first_run
     images = gen_images(spark, N, 7)
@@ -67,13 +94,13 @@ def test_config_change_invalidates_checkpoints(spark, first_run):
     )
 
 
-def test_plan_only_knobs_keep_fingerprint_stable():
-    """containment_broadcast_max only changes the physical join plan (both
-    shapes output-identical, tests/test_suffix.py) — toggling the huge-corpus
-    escape hatch must not invalidate checkpoints (ADVICE r3)."""
-    base = PipelineConfig().fingerprint()
-    assert PipelineConfig(containment_broadcast_max=0).fingerprint() == base
-    assert PipelineConfig(jaccard_threshold=0.9).fingerprint() != base
+# approximation censuses (VERDICT r3 #5): stage → census carried in its
+# manifest
+CENSUSES = {
+    "t_skew_report": "salting_lost_pairs",
+    "t_verified": "verify_slack_skips",
+    "t_containment": "containment_skipped_groups",
+}
 
 
 def test_lineage_and_metrics_written(spark, first_run):
@@ -90,55 +117,19 @@ def test_lineage_and_metrics_written(spark, first_run):
     # t_sigs was computed exactly once under run "rr": per-partition rows sum
     # to the materialized row count (per-partition lineage mandate)
     assert m_rr.groupby("stage").rows_out.sum()["t_sigs"] == N - 3  # 3 invalid
-    # approximation censuses are durable metrics rows, not just logs
-    # (VERDICT r3 #5): one row per census per computing run
-    census = m_rr[m_rr.stage.str.startswith("census_")]
-    assert set(census.stage) == {
-        "census_salting_lost_pairs",
-        "census_verify_slack_skips",
-        "census_containment_skipped_groups",
-    }
-    assert (census.rows_out >= 0).all()
+    assert (metrics.partition_id >= 0).all()
 
-
-def test_census_backfill_on_skip(spark, tmp_path):
-    """ADVICE r4: censuses are now written BEFORE the stage manifest, so
-    'done' implies census-present for new stores. For stores committed by
-    older code (census after manifest — a crash window), the skip path
-    backfills a missing census from the committed table. Simulate the
-    legacy hole by deleting the census rows of a done store and resuming.
-    (Own store: the module fixture's store is rewritten under another
-    run_id by the config-change test, so skips there are order-dependent.)"""
-    root = str(tmp_path / "census_store")
-    images = gen_images(spark, 120, 7)
-    run_pipeline(spark, images, root, run_id="cb")
-    mdir = os.path.join(root, "t_metrics")
-    restorable = [
-        "census_salting_lost_pairs-cb.parquet",
-        "census_containment_skipped_groups-cb.parquet",
-    ]
-    before = spark.read.parquet(mdir).toPandas()
-    before = dict(
-        zip(before[before.partition_id == -1].stage,
-            before[before.partition_id == -1].rows_out)
-    )
-    for fname in restorable:
-        os.remove(os.path.join(mdir, fname))
-
-    run = run_pipeline(spark, images, root, run_id="cb")
-    assert all(r.skipped for r in run.results)
-
-    after = spark.read.parquet(mdir).toPandas()
-    after = dict(
-        zip(after[after.partition_id == -1].stage,
-            after[after.partition_id == -1].rows_out)
-    )
-    for fname in restorable:
-        stage = fname.rsplit("-", 1)[0]
-        assert after[stage] == before[stage], stage
-    # the verify slack census is only observable while the stage computes
-    # (census_on_skip=False) — still present because we did not delete it
-    assert "census_verify_slack_skips" in after
+    # censuses are durable manifest fields, not just logs; the lineage log
+    # appends every manifest, so it is the run's recall-budget view
+    for stage, cname in CENSUSES.items():
+        with open(os.path.join(root, f"{stage}.manifest.json")) as f:
+            manifest = json.load(f)
+        assert manifest["census"][cname] >= 0, stage
+        rows = [l for l in lineage if l["stage"] == stage]
+        assert rows[-1] == manifest, stage
+        assert all(l["census"][cname] >= 0 for l in rows), stage
+        assert any(l["run_id"] == "rr" for l in rows), stage
+    assert all("census" not in l for l in lineage if l["stage"] not in CENSUSES)
 
 
 def test_sync_stage_failure_reaps_async_pool(spark, tmp_path, monkeypatch):

@@ -128,15 +128,12 @@ def test_batch_winnowed_matches_per_doc_reference():
         assert got_anchor[i] == int(to_signed64(h.min(keepdims=True))[0])
 
 
-def test_anchor_join_broadcast_gate_same_pairs(spark):
+def test_anchor_join_broadcast_gate_same_pairs(spark, monkeypatch):
     """The anchor-key join must produce identical containment pairs whether
-    the key side is broadcast (count under cfg.containment_broadcast_max)
-    or falls through to the plain shuffled semi-join (VERDICT r2 #2): the
-    gate changes the physical plan, never the output."""
-    import dataclasses
-
-    from dedup_spark.config import DEFAULT_CONFIG
-    from dedup_spark.operators.containment import containment_stage
+    the key side is broadcast (doc count under BROADCAST_MAX_DOCS) or falls
+    through to the plain shuffled semi-join (VERDICT r2 #2): the gate
+    changes the physical plan, never the output."""
+    from dedup_spark.operators import containment
     from dedup_spark.operators.textdedup import text_signatures
 
     base = "solid stretch of twenty alpha beta gamma delta tokens " * 3
@@ -150,13 +147,12 @@ def test_anchor_join_broadcast_gate_same_pairs(spark):
     docs = spark.createDataFrame(rows, "doc_id string, text string")
     sigs = text_signatures(docs, "doc_id", "text").localCheckpoint()
 
-    def pairs(cfg):
-        df, _ = containment_stage(sigs, cfg)
+    def pairs():
+        df, _ = containment.containment_stage(sigs)
         return {(r.a, r.b) for r in df.collect()}
 
-    hinted = pairs(DEFAULT_CONFIG)  # anchor rows << 20M -> broadcast branch
-    shuffled = pairs(
-        dataclasses.replace(DEFAULT_CONFIG, containment_broadcast_max=0)
-    )
+    hinted = pairs()  # docs << 20M -> broadcast branch
+    monkeypatch.setattr(containment, "BROADCAST_MAX_DOCS", 0)
+    shuffled = pairs()
     assert hinted == shuffled
     assert {("d00", "p00"), ("d05", "p00")} <= hinted
