@@ -9,20 +9,32 @@ run_id resumes mid-pipeline (BASELINE.json:14), verified by tests/test_resume.
 Stage graph (materialized checkpoints only; banding / exact edges / star
 pairs / dir digests are views recomputed from their checkpointed parent —
 cheaper than a materialization barrier). t_salted … t_clusters is
-``dedup_chain``, the chain the text slice (operators.textdedup) runs too:
+``dedup_chain``, the chain the text slice (operators.textdedup) runs too.
 
-  images ─ t_sigs ─┬─ t_containment ───────────────────┐
-   (validity fused)├─ t_salted ─┬─ t_hamming ──────────┤
-                   │            └─(star pairs)─ t_verified ─ t_rescued ─┐
-                   ├─(exact edges)──────────────────────────── t_clusters
-                   └─ t_dup_dirs ──► t_report ◄── t_winners ◄───────┘
+The main thread commits the critical path; every other stage runs BESIDE it
+on a thread pool (``run_pipeline``), and its consumer waits for it only where
+it reads that table:
+
+  main thread   images ─ t_sigs ─ t_salted ─ t_verified ─ t_rescued ─
+  (validity      t_clusters ─ t_winners ─ t_report
+   fused into    (views: star pairs of t_salted feed t_verified, exact
+   t_sigs)        edges of t_sigs feed t_clusters)
+
+  background    stage            input        read by
+                t_containment    t_sigs       t_verified, t_clusters
+                t_invalid        t_sigs       (leaf diagnostic)
+                t_dup_dirs       t_sigs       t_dir_report, t_report
+                t_dir_report     t_dup_dirs   (leaf diagnostic)
+                t_skew_report    t_salted     (leaf diagnostic)
+                t_hamming        t_salted     t_rescued, t_clusters
 """
 
 from __future__ import annotations
 
+import functools
 import logging
 import time
-from concurrent.futures import CancelledError, ThreadPoolExecutor
+from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, field
 from typing import Callable
 
@@ -45,12 +57,19 @@ class PipelineRun:
     results: list[StageResult] = field(default_factory=list)
 
 
+def resolve(table: DataFrame | Callable[[], DataFrame]) -> DataFrame:
+    """A committed table, or the one behind a background stage's handle:
+    calling the handle waits for that stage and re-raises its error. (A
+    DataFrame is not callable; ``hasattr`` would resolve as a column.)"""
+    return table() if callable(table) else table
+
+
 def dedup_chain(
     sigs: DataFrame,
     cfg: PipelineConfig,
-    commit: Callable[[str, Callable[[], DataFrame]], DataFrame],
+    commit: Callable[[str, Callable[[], DataFrame]], DataFrame | Callable],
     verify_fn: Callable[[DataFrame], DataFrame],
-    contain: DataFrame | None = None,
+    contain: DataFrame | Callable[[], DataFrame] | None = None,
     exact_edges: DataFrame | None = None,
 ) -> DataFrame:
     """signatures → clusters(image_id, cluster_id): the one near-dup chain,
@@ -61,11 +80,13 @@ def dedup_chain(
     orphan rescue → connected components.
 
     ``commit(name, compute)`` materializes each intermediate and returns the
-    frame to consume: the pipeline's stage store, the text slice's
-    localCheckpoint. t_salted is consumed three times (Hamming verifier,
-    star pass, orphan rescue), so it must be a real barrier. The image path
-    also passes its ``contain`` pairs (verified with the candidates and kept
-    as edges) and its ``exact_edges`` (digest groups).
+    frame to consume, or a handle to it (see ``resolve``) for a stage
+    committed beside the chain: the pipeline's stage store (t_hamming runs
+    in the background), the text slice's localCheckpoint. t_salted is
+    consumed three times (Hamming verifier, star pass, orphan rescue), so it
+    must be a real barrier. The image path also passes its ``contain`` pairs
+    (verified with the candidates and kept as edges; may be a handle too)
+    and its ``exact_edges`` (digest groups).
     """
     t_salted = commit(
         "t_salted",
@@ -81,10 +102,13 @@ def dedup_chain(
     mh_salted = t_salted.where(F.col("family") == "minhash")
     cand = pairs_op.candidate_pairs(mh_salted)
     if contain is not None:
+        contain = resolve(contain)
         cand = pairs_op.union_pairs(cand, contain)
     t_verified = commit("t_verified", lambda: verify_fn(cand))
 
-    linked = [t_hamming] + ([exact_edges] if exact_edges is not None else [])
+    linked = [resolve(t_hamming)]
+    if exact_edges is not None:
+        linked.append(exact_edges)
     # orphan rescue (see operators.pairs): minhash-bucketed rows with
     # candidates but zero links anywhere get one capped exhaustive round.
     # "Judged" = verify output + links of the other families, so rows linked
@@ -161,25 +185,30 @@ def run_pipeline(
     store = make_store(spark, store_root, run_id, fp)
     run = PipelineRun(store=store)
 
-    # Leaf DIAGNOSTIC stages (nothing downstream consumes them) run in the
-    # BACKGROUND on a small thread pool, concurrent with the main chain
-    # (VERDICT r3 #3): Spark schedules jobs submitted from multiple threads
-    # task-by-task, so these thin jobs fill the executor slots the big
-    # stages leave idle at their tails instead of each paying a serial
-    # commit barrier — at 16 cores the four diagnostics were ~8-9 s of the
-    # fixed residue that capped scaling efficiency at mid input sizes. Their
-    # results are appended after the main chain finishes (stable submission
-    # order); any failure re-raises at the join point.
-    pool = ThreadPoolExecutor(max_workers=3)
-    async_stages: list[tuple[str, object]] = []  # (name, Future | StageResult)
+    # Stages nothing on the critical path needs yet run in the BACKGROUND on
+    # this pool, beside the main chain: t_invalid, t_containment, t_dup_dirs,
+    # t_dir_report, t_skew_report and t_hamming. Spark schedules jobs
+    # submitted from several threads task by task, so their jobs fill the
+    # executor slots the main chain's stages leave idle instead of each
+    # paying a serial commit barrier in front of it. A background stage
+    # returns a handle to its committed table; its consumer calls it where it
+    # reads the table, and any failure re-raises there or at the final join.
+    # The pool cannot deadlock: it is FIFO, stages are submitted in
+    # topological order (a background job only waits on an earlier one), and
+    # it has one worker per background stage, so none ever queues.
+    pool = ThreadPoolExecutor(max_workers=6, thread_name_prefix="dedup-stage")
+    pending: list[tuple[str, Future]] = []
+    # one slot per stage in submission order, filled by the thread that
+    # commits it, so run.results does not depend on thread timing
+    slots: dict[str, StageResult | None] = {}
 
     def stage(
         name: str, compute, census=None, background=False
-    ) -> DataFrame | None:
+    ) -> DataFrame | Callable[[], DataFrame]:
         """The one stage commit: SKIP if the store says ``name`` is done,
-        else compute → store.write, on the pool when ``background`` (then
-        nothing is returned; the result joins run.results at join_async),
-        else inline, returning the committed table.
+        else compute → store.write; returns the committed table, or when
+        ``background`` (the commit runs on the pool) a handle that waits
+        for the commit and then reads the table.
 
         ``census=(census_name, fn)``: store.write puts fn(committed_df, rows)
         into the stage's manifest, so a done stage always carries its
@@ -188,47 +217,50 @@ def run_pipeline(
         is_done runs on the calling thread and store.write on the thread
         that runs the job: that is how perfbench.trace tells background
         stages from inline ones."""
-        if store.is_done(name):
-            res = StageResult(name, -1, skipped=True)
-        else:
+        slots[name] = None
+        done = store.is_done(name)
 
-            def job() -> StageResult:
+        def job() -> None:
+            if done:
+                slots[name] = StageResult(name, -1, skipped=True)
+            else:
                 t0 = time.perf_counter()
                 res = store.write(name, compute(), census=census)
                 res.seconds = round(time.perf_counter() - t0, 2)
-                return res
+                slots[name] = res
 
-            res = pool.submit(job) if background else job()
-        if background:
-            async_stages.append((name, res))
-            return None
-        run.results.append(res)
-        return store.read(spark, name)
+        if not background:
+            job()
+            return store.read(spark, name)
+        fut = pool.submit(job)
+        pending.append((name, fut))
 
-    def join_async(failed: bool = False) -> None:
-        """Collect async-stage results and reap the pool. On the FAILURE
-        path (a synchronous stage raised — ADVICE r4) pending futures are
-        cancelled, running ones awaited, and any async-stage exception is
-        logged rather than raised so the primary error propagates and no
-        non-daemon worker outlives the pipeline."""
+        # read once, and only if a consumer asks: a read infers the schema
+        # with a Spark job
+        @functools.cache
+        def table() -> DataFrame:
+            fut.result()
+            return store.read(spark, name)
+
+        return table
+
+    def join(failed: bool = False) -> None:
+        """Wait for the background stages and reap the pool. On the FAILURE
+        path (a stage raised — ADVICE r4) queued jobs are cancelled, running
+        ones awaited, and their errors logged rather than raised, so the
+        primary error propagates and no worker outlives the pipeline."""
+        if failed:
+            pool.shutdown(wait=True, cancel_futures=True)
+            for name, fut in pending:
+                if not fut.cancelled() and fut.exception() is not None:
+                    log.error(
+                        "background stage %s failed during pipeline failure",
+                        name, exc_info=fut.exception(),
+                    )
+            return
         try:
-            for name, item in async_stages:
-                if isinstance(item, StageResult):
-                    run.results.append(item)
-                    continue
-                if failed:
-                    item.cancel()
-                    try:
-                        run.results.append(item.result())
-                    except CancelledError:
-                        pass
-                    except Exception:
-                        log.exception(
-                            "async stage %s failed during pipeline failure",
-                            name,
-                        )
-                else:
-                    run.results.append(item.result())
+            for _, fut in pending:
+                fut.result()
         finally:
             pool.shutdown(wait=True)
 
@@ -308,17 +340,6 @@ def run_pipeline(
 
         t_sigs = stage("t_sigs", _sigs)
 
-        # invalid-row diagnostics (S9 analog) by thin anti-join against the
-        # signature ids: reads ONLY pruned metadata columns of the input — the
-        # payload is scanned exactly once in this pipeline, by t_sigs above
-        stage(
-            "t_invalid",
-            lambda: images.select("image_id", "w", "h", "fmt").join(
-                t_sigs.select("image_id"), "image_id", "left_anti"
-            ),
-            background=True,
-        )
-
         # censuses counted EAGERLY inside a stage's compute, so they are ready
         # when its store.write census hook fires: the anchor-gram groups
         # containment dropped at its group cap, and verify_pairs' count of
@@ -331,15 +352,39 @@ def run_pipeline(
             censuses["containment_skipped_groups"] = skipped.count()
             return pair_df
 
+        # submitted first of the background stages: Spark's FIFO scheduler
+        # favours earlier jobs, and t_verified is the first to wait on it
         t_contain = stage(
             "t_containment", _containment,
             census=(
                 "containment_skipped_groups",
                 lambda out, rows: censuses["containment_skipped_groups"],
             ),
+            background=True,
         )
 
-        def commit(name: str, compute) -> DataFrame:
+        # invalid-row diagnostics (S9 analog) by thin anti-join against the
+        # signature ids: reads ONLY pruned metadata columns of the input — the
+        # payload is scanned exactly once in this pipeline, by t_sigs above
+        stage(
+            "t_invalid",
+            lambda: images.select("image_id", "w", "h", "fmt").join(
+                t_sigs.select("image_id"), "image_id", "left_anti"
+            ),
+            background=True,
+        )
+
+        t_dup_dirs = stage(
+            "t_dup_dirs",
+            lambda: rollup.dup_dirs(rollup.dir_digests(t_sigs)),
+            background=True,
+        )
+        stage(
+            "t_dir_report", lambda: report_op.dir_report(t_dup_dirs()),
+            background=True,
+        )
+
+        def commit(name: str, compute) -> DataFrame | Callable:
             if name == "t_verified":
                 return stage(
                     name, compute,
@@ -348,7 +393,7 @@ def run_pipeline(
                         lambda out, rows: censuses["slack_skips"],
                     ),
                 )
-            out = stage(name, compute)
+            out = stage(name, compute, background=name == "t_hamming")
             if name == "t_salted":
                 # the skew report is derived FROM the committed salted table —
                 # one tiny groupBy over parquet instead of re-running banding
@@ -379,28 +424,20 @@ def run_pipeline(
 
         t_winners = stage("t_winners", lambda: winners.select_winners(t_clusters))
 
-        t_dup_dirs = stage(
-            "t_dup_dirs", lambda: rollup.dup_dirs(rollup.dir_digests(t_sigs))
-        )
-
         def _report():
-            sup = rollup.suppressed_members(t_sigs, t_dup_dirs)
+            sup = rollup.suppressed_members(t_sigs, t_dup_dirs())
             return report_op.image_report(t_winners, sup)
 
         stage("t_report", _report)
-        stage(
-            "t_dir_report", lambda: report_op.dir_report(t_dup_dirs),
-            background=True,
-        )
     except BaseException:
-        # a synchronous stage raised: reap the async pool NOW so its
-        # non-daemon workers cannot keep running Spark jobs after the
-        # pipeline has failed, and their exceptions surface in the log
-        # instead of vanishing un-.result()ed (ADVICE r4); the primary
-        # error propagates
-        join_async(failed=True)
+        # a stage raised: reap the pool NOW so its non-daemon workers cannot
+        # keep running Spark jobs after the pipeline has failed, and their
+        # exceptions surface in the log instead of vanishing un-.result()ed
+        # (ADVICE r4); the primary error propagates
+        join(failed=True)
         raise
-    join_async()
+    join()
+    run.results = list(slots.values())
     return run
 
 

@@ -29,6 +29,8 @@ def test_rerun_skips_all_stages(spark, first_run):
     assert all(r.skipped for r in run2.results), [
         r.name for r in run2.results if not r.skipped
     ]
+    # results come in stage-submission order, not thread-finish order
+    assert [r.name for r in run2.results] == [r.name for r in run1.results]
     report2 = (
         spark.read.parquet(f"{root}/t_report")
         .toPandas()
@@ -150,9 +152,10 @@ def test_sync_stage_failure_reaps_async_pool(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(winners_mod, "select_winners", boom)
     with pytest.raises(RuntimeError, match="injected winner failure"):
         run_pipeline(spark, images, root, run_id="sf")
-    # by t_winners the early async diagnostics were already running; the
-    # failure path awaited them, so their commits are durable
-    for name in ["t_invalid", "t_skew_report"]:
+    # by t_winners the background stages were already running (t_dup_dirs
+    # and t_dir_report do not depend on t_winners); the failure path
+    # awaited them, so their commits are durable
+    for name in ["t_invalid", "t_skew_report", "t_dup_dirs", "t_dir_report"]:
         assert os.path.exists(os.path.join(root, f"{name}.manifest.json")), name
     assert not os.path.exists(os.path.join(root, "t_winners.manifest.json"))
 
@@ -160,7 +163,46 @@ def test_sync_stage_failure_reaps_async_pool(spark, tmp_path, monkeypatch):
     run2 = run_pipeline(spark, images, root, run_id="sf")
     recomputed = {r.name for r in run2.results if not r.skipped}
     # everything downstream of (and including) the failed stage recomputes
-    assert recomputed == {"t_winners", "t_dup_dirs", "t_report", "t_dir_report"}
+    assert recomputed == {"t_winners", "t_report"}
+
+
+def test_consumed_background_stage_failure_surfaces_and_resumes(
+    spark, tmp_path, monkeypatch
+):
+    """t_containment runs beside the main chain and t_verified waits on it.
+    Its failure must re-raise from run_pipeline (not hang, not be
+    swallowed), leave no pool thread alive, and a rerun must recompute it
+    and everything downstream while skipping every stage that committed."""
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    import dedup_spark.operators.containment as containment_mod
+
+    root = str(tmp_path / "contain_fail_store")
+    images = gen_images(spark, N, 7)
+
+    def boom(sigs, cfg):
+        raise RuntimeError("injected containment failure")
+
+    monkeypatch.setattr(containment_mod, "containment_stage", boom)
+    caller = ThreadPoolExecutor(max_workers=1)
+    fut = caller.submit(run_pipeline, spark, images, root, run_id="cf")
+    caller.shutdown(wait=False)
+    with pytest.raises(RuntimeError, match="injected containment failure"):
+        fut.result(timeout=900)
+    assert not [t for t in threading.enumerate()
+                if t.name.startswith("dedup-stage")]
+    survived = {f.removesuffix(".manifest.json") for f in os.listdir(root)
+                if f.endswith(".manifest.json")}
+    downstream = {"t_containment", "t_verified", "t_rescued", "t_clusters",
+                  "t_winners", "t_report"}
+    assert survived and not survived & downstream
+
+    monkeypatch.undo()
+    run2 = run_pipeline(spark, images, root, run_id="cf")
+    skipped = {r.name for r in run2.results if r.skipped}
+    assert skipped == survived
+    assert downstream <= {r.name for r in run2.results if not r.skipped}
 
 
 def test_async_stage_failure_surfaces_and_resumes(spark, tmp_path, monkeypatch):
