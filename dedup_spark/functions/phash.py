@@ -103,8 +103,3 @@ def phash_batch(
         stack = np.stack([decode(fmt, datas[i], w, h) for i in idxs])
         out[np.array(idxs)] = phash_stack(stack, size=size, block=block)
     return out
-
-
-def phash_from_bytes(fmt: str, data: bytes, w: int, h: int,
-                     size: int = 32, block: int = 8) -> int:
-    return phash64(decode(fmt, data, w, h), size=size, block=block)

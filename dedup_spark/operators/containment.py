@@ -46,6 +46,7 @@ from pyspark.sql.types import (
 from dedup_spark.config import DEFAULT_CONFIG, PipelineConfig
 from dedup_spark.functions.hashing import to_signed64
 from dedup_spark.functions.minhash import splitmix64
+from dedup_spark.session import map_in_groups, py_parallelism
 
 # anchor-key join strategy: broadcast the (one-row-per-eligible-doc)
 # anchor-key side only while the doc count stays under this; above it
@@ -163,8 +164,6 @@ def gram_index(sigs: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFra
                 }
             )
 
-    from dedup_spark.session import py_parallelism
-
     return (
         sigs.select("image_id", "caption_norm")
         .coalesce(py_parallelism(sigs.sparkSession))
@@ -279,13 +278,9 @@ def containment_pairs_df(
 ) -> DataFrame:
     """Containment scan over each anchor-gram group → (a, b).
 
-    NOT applyInPandas: per-group grouped-map pays Arrow + pandas setup for
-    every group, and anchor groups are tiny and numerous (~1.17M 2–15 member
-    groups at n=6.4M), so the fixed per-group cost dwarfs the actual
-    matching work by ~30×. Instead: repartition on gram, sort within
-    partitions, and run ONE mapInPandas whose batches each carry many
-    complete groups — the group that straddles a batch boundary is carried
-    into the next batch (batches of one partition arrive in order).
+    Batched by session.map_in_groups on gram: anchor groups are tiny and
+    numerous (~1.17M 2–15 member groups at n=6.4M), so a per-group
+    grouped map's fixed cost would dwarf the matching work by ~30×.
     """
     min_len = cfg.suffix_min_len
     with_text = membership.join(
@@ -322,31 +317,9 @@ def containment_pairs_df(
         return pd.DataFrame({"a": [p[0] for p in arr],
                              "b": [p[1] for p in arr]})
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if not len(pdf):
-                continue
-            last = pdf["gram"].iloc[-1]
-            boundary = pdf["gram"] == last
-            carry = pdf[boundary]
-            done = pdf[~boundary]
-            if len(done):
-                yield emit(done)
-        if carry is not None and len(carry):
-            yield emit(carry)
-
-    from dedup_spark.session import py_parallelism
-
-    nparts = py_parallelism(membership.sparkSession)
-    return (
-        with_text.repartition(nparts, "gram")
-        .sortWithinPartitions("gram")
-        .mapInPandas(run, schema=_PAIRS_SCHEMA)
-        .dropDuplicates(["a", "b"])
-    )
+    return map_in_groups(
+        with_text, ["gram"], emit, _PAIRS_SCHEMA
+    ).dropDuplicates(["a", "b"])
 
 
 def containment_stage(

@@ -15,10 +15,8 @@ orphan-rescue this
 - costs Σ m² popcounts per band with m bounded by the salting: Hamming
   families salt with UNBOUNDED fanout = ceil(size/cap) (operators.skew), so
   sub-buckets stay ≈ cap regardless of how hot the bucket is — worker
-  memory for the match matrix is O(cap²), a few KB. Defense in depth: a
-  sub-bucket above ``_MATRIX_MAX`` members (possible only under extreme
-  salt-hash imbalance) switches to blockwise label propagation that never
-  materializes an m×m matrix — O(block·m) peak memory, same exact output.
+  memory for the match matrix is O(cap²), a few KB. A sub-bucket above
+  ``_MATRIX_MAX`` members means that salting invariant broke, and raises.
 
 Residual recall trade-off: a true pair inside a HOT bucket whose two rows
 land in different salt sub-buckets loses that bucket; recovery relies on the
@@ -31,14 +29,12 @@ them one component); such rows carry ``spanning = true`` so pair-level
 consumers (reports, precision audits) can separate "verified direct match"
 from "component spanning link". Cluster output is identical either way.
 
-Batching mirrors operators.containment: repartition on the bucket key, sort
-within partitions, one mapInPandas whose batches carry many complete groups,
-with the boundary group carried between batches.
+Batching is session.map_in_groups on the bucket key, as in
+operators.containment: one mapInPandas whose batches carry many complete
+buckets.
 """
 
 from __future__ import annotations
-
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -53,6 +49,7 @@ from pyspark.sql.types import (
 )
 
 from dedup_spark.config import DEFAULT_CONFIG, PipelineConfig
+from dedup_spark.session import map_in_groups
 
 _KEY = ["family", "band_idx", "band_key", "salt"]
 
@@ -70,8 +67,8 @@ _POP = np.unpackbits(np.arange(256, dtype=np.uint8)[:, None], axis=1).sum(
     axis=1
 ).astype(np.uint16)
 
-# matrix path above this size would allocate O(m²) worker memory; switch to
-# the blockwise propagation (reachable only under severe salt imbalance)
+# the m×m match matrix is O(m²) worker memory; Hamming salting keeps
+# sub-buckets near bucket_cap (64), 32× under this
 _MATRIX_MAX = 2048
 
 
@@ -101,32 +98,6 @@ def _labels_matrix(hv: np.ndarray, thr: int) -> np.ndarray | None:
     return labels
 
 
-def _labels_blockwise(hv: np.ndarray, thr: int) -> np.ndarray | None:
-    """Same labels, O(block·m) memory: distances are recomputed per
-    propagation round instead of materializing the m×m matrix."""
-    m = len(hv)
-    labels = np.arange(m)
-    block = max(1, (1 << 22) // m)
-    big = np.int64(m)
-    changed_any = False
-    for _ in range(64):
-        new = labels.copy()
-        for lo in range(0, m, block):
-            hi = min(lo + block, m)
-            x = hv[lo:hi, None] ^ hv[None, :]
-            d = _POP[x.view(np.uint8).reshape(hi - lo, m, 8)].sum(axis=2)
-            match = d <= thr
-            match[np.arange(hi - lo), np.arange(lo, hi)] = False
-            nbr = np.where(match, labels[None, :], big).min(axis=1)
-            new[lo:hi] = np.minimum(new[lo:hi], nbr)
-        new = np.minimum(new, new[new])
-        if np.array_equal(new, labels):
-            break
-        labels = new
-        changed_any = True
-    return labels if changed_any else None
-
-
 def _bucket_edges(ids: np.ndarray, hv: np.ndarray, thr: int,
                   out: dict, family: str) -> None:
     """Emit a SPANNING edge set of the bucket's threshold graph.
@@ -151,13 +122,16 @@ def _bucket_edges(ids: np.ndarray, hv: np.ndarray, thr: int,
             out["hamming"].append(d)
             out["spanning"].append(False)
         return
+    if m > _MATRIX_MAX:
+        raise ValueError(
+            f"{family} sub-bucket of {m} members exceeds {_MATRIX_MAX}: "
+            "Hamming salting (operators.skew) must keep sub-buckets near "
+            "bucket_cap"
+        )
     order = np.argsort(ids)          # lexicographic root = deterministic
     ids = ids[order]
     hv = hv[order].astype(np.uint64)
-    labels = (
-        _labels_matrix(hv, thr) if m <= _MATRIX_MAX
-        else _labels_blockwise(hv, thr)
-    )
+    labels = _labels_matrix(hv, thr)
     if labels is None:
         return
     members = np.nonzero(labels != np.arange(m))[0]
@@ -222,32 +196,7 @@ def hamming_family_pairs(
             )
         return pd.DataFrame(out)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if not len(pdf):
-                continue
-            last = tuple(pdf.iloc[-1][k] for k in _KEY)
-            boundary = np.ones(len(pdf), dtype=bool)
-            for k, v in zip(_KEY, last):
-                boundary &= (pdf[k] == v).to_numpy()
-            carry = pdf[boundary]
-            done = pdf[~boundary]
-            if len(done):
-                yield emit(done)
-        if carry is not None and len(carry):
-            yield emit(carry)
-
-    from dedup_spark.session import py_parallelism
-
-    nparts = py_parallelism(salted_bands.sparkSession)
-    pairs = (
-        src.repartition(nparts, *_KEY)
-        .sortWithinPartitions(*_KEY)
-        .mapInPandas(run, schema=PAIRS_SCHEMA)
-    )
+    pairs = map_in_groups(src, _KEY, emit, PAIRS_SCHEMA)
     return (
         pairs.groupBy("a", "b")
         .agg(

@@ -47,15 +47,14 @@ def _star_pairs(salted_bands: DataFrame) -> DataFrame:
 
 
 def candidate_pairs(salted_bands: DataFrame) -> DataFrame:
-    df = salted_bands.drop("hot") if "hot" in salted_bands.columns else salted_bands
-    return _star_pairs(df).dropDuplicates(["a", "b"])
+    return _star_pairs(salted_bands).dropDuplicates(["a", "b"])
 
 
 def orphan_rescue_pairs(
     salted_bands: DataFrame,
     verified: DataFrame,
+    node_ids: DataFrame,
     per_orphan_cap: int = 4096,
-    node_ids: DataFrame | None = None,
 ) -> DataFrame:
     """Second-chance candidates for rows the star pass failed to link.
 
@@ -81,6 +80,10 @@ def orphan_rescue_pairs(
     back with one semi-join (AQE broadcasts the small orphan set); singleton
     sub-buckets need no pre-filter — they cannot produce an (o != m) pair in
     the member join. The big table crosses the wire once, on the bucket key.
+    ``node_ids`` is the caller's distinct id list (the t_sigs ids: every
+    signature emits >=1 band row, so the sets are identical), which spares a
+    hash-aggregate pass over the fat salted table (~50M band rows per 3.2M
+    images; measured ~15-20 s of t_rescued at 16c).
     """
     ok = verified.where("verified")
     linked = (
@@ -88,22 +91,11 @@ def orphan_rescue_pairs(
         .unionByName(ok.select(F.col("b").alias("image_id")))
         .distinct()
     )
-    df = salted_bands.drop("hot") if "hot" in salted_bands.columns else salted_bands
-    # r4: when the caller already holds the distinct node list (t_sigs ids —
-    # every signature emits >=1 band row, so the sets are identical), use it
-    # and skip a full hash-aggregate pass over the fat salted table (~50M
-    # band rows per 3.2M images; the agg is map-side combined but still
-    # scans and hashes every row — measured ~15-20 s of t_rescued at 16c)
-    universe = (
-        node_ids.select("image_id")
-        if node_ids is not None
-        else df.select("image_id").distinct()
-    )
-    orphan_ids = universe.join(linked, "image_id", "left_anti")
-    orphans = df.join(orphan_ids, "image_id", "leftsemi").select(
+    orphan_ids = node_ids.select("image_id").join(linked, "image_id", "left_anti")
+    orphans = salted_bands.join(orphan_ids, "image_id", "leftsemi").select(
         *_SKEY, F.col("image_id").alias("o")
     )
-    members = df.select(*_SKEY, F.col("image_id").alias("m"))
+    members = salted_bands.select(*_SKEY, F.col("image_id").alias("m"))
     cand = (
         orphans.join(members, _SKEY)
         .where(F.col("o") != F.col("m"))
@@ -124,12 +116,3 @@ def orphan_rescue_pairs(
     )
     # don't re-verify pairs round one already judged (either outcome)
     return capped.join(verified.select("a", "b"), ["a", "b"], "left_anti")
-
-
-def union_pairs(*pair_dfs: DataFrame) -> DataFrame:
-    """Cross-family union → distinct (a, b) (B20)."""
-    out = None
-    for df in pair_dfs:
-        d = df.select("a", "b")
-        out = d if out is None else out.unionByName(d)
-    return out.dropDuplicates(["a", "b"])

@@ -39,14 +39,3 @@ def dir_report(dup_dirs_df: DataFrame) -> DataFrame:
         .select("dir", "dir_digest", "level", "n_dirs", "is_winner")
         .orderBy(F.desc("n_dirs"), "dir_digest", "dir")
     )
-
-
-def top_clusters(winners_df: DataFrame, k: int = 100) -> DataFrame:
-    """Largest duplicate sets (B31) — TakeOrdered, no full sort."""
-    return (
-        winners_df.groupBy("cluster_id")
-        .agg(F.count("*").alias("cluster_size"))
-        .where(F.col("cluster_size") > 1)
-        .orderBy(F.desc("cluster_size"), "cluster_id")
-        .limit(k)
-    )

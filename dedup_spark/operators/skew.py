@@ -84,9 +84,7 @@ def salted_bands(
                 F.pmod(F.xxhash64("image_id"), F.col("fanout")).cast("int"),
             ).otherwise(F.lit(0)),
         )
-        # `hot` tells pair generation to switch from the quadratic in-bucket
-        # self-join to linear star edges (operators.pairs) — a mega-cluster of
-        # k boilerplate captions must cost O(k) candidates, not O(k^2/fanout)
+        # `hot` marks the buckets skew_report_from_salted censuses
         .withColumn("hot", F.col("bucket_size") > cfg.bucket_cap)
         .drop("bucket_size", "fanout")
     )

@@ -49,6 +49,9 @@ def verify_pairs(
     +5 sd), so its skip count is CENSUSED — one cheap count over the
     checkpointed phase-1 frame, recorded like the salting loss census
     (operators.skew) — rather than silently assumed negligible (ADVICE r2).
+    The census covers only the pairs passed in: in the chain those are the
+    minhash star candidates (containment pairs are linked edges and never
+    reach this verify).
     """
     slim = sigs.select("image_id", "sha256", "n_shingles", "simhash", "phash")
     sa = slim.select(

@@ -18,10 +18,10 @@ it reads that table:
   main thread   images ─ t_sigs ─ t_salted ─ t_verified ─ t_rescued ─
   (validity      t_clusters ─ t_winners ─ t_report
    fused into    (views: star pairs of t_salted feed t_verified, exact
-   t_sigs)        edges of t_sigs feed t_clusters)
+   t_sigs)        edges of t_sigs feed t_rescued and t_clusters)
 
   background    stage            input        read by
-                t_containment    t_sigs       t_verified, t_clusters
+                t_containment    t_sigs       t_rescued, t_clusters
                 t_invalid        t_sigs       (leaf diagnostic)
                 t_dup_dirs       t_sigs       t_dir_report, t_report
                 t_dir_report     t_dup_dirs   (leaf diagnostic)
@@ -36,7 +36,7 @@ import logging
 import time
 from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, field
-from typing import Callable
+from typing import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -69,8 +69,7 @@ def dedup_chain(
     cfg: PipelineConfig,
     commit: Callable[[str, Callable[[], DataFrame]], DataFrame | Callable],
     verify_fn: Callable[[DataFrame], DataFrame],
-    contain: DataFrame | Callable[[], DataFrame] | None = None,
-    exact_edges: DataFrame | None = None,
+    linked: Sequence[DataFrame | Callable[[], DataFrame]] = (),
 ) -> DataFrame:
     """signatures → clusters(image_id, cluster_id): the one near-dup chain,
     shared by run_pipeline and the text slice (operators.textdedup).
@@ -84,9 +83,14 @@ def dedup_chain(
     committed beside the chain: the pipeline's stage store (t_hamming runs
     in the background), the text slice's localCheckpoint. t_salted is
     consumed three times (Hamming verifier, star pass, orphan rescue), so it
-    must be a real barrier. The image path also passes its ``contain`` pairs
-    (verified with the candidates and kept as edges; may be a handle too)
-    and its ``exact_edges`` (digest groups).
+    must be a real barrier.
+
+    ``linked``: edge sets (a, b) whose family already decided them — the
+    image path's containment pairs and digest groups. Each is a frame or a
+    handle and is treated exactly like t_hamming: ``verify_fn`` never sees
+    it (it judges the minhash star candidates only), it is resolved just
+    before t_rescued, joins the rescue's judged pairs as verified, and is
+    unioned into the CC edges.
     """
     t_salted = commit(
         "t_salted",
@@ -100,21 +104,18 @@ def dedup_chain(
         "t_hamming", lambda: hamming.hamming_family_pairs(t_salted, cfg=cfg)
     )
     mh_salted = t_salted.where(F.col("family") == "minhash")
-    cand = pairs_op.candidate_pairs(mh_salted)
-    if contain is not None:
-        contain = resolve(contain)
-        cand = pairs_op.union_pairs(cand, contain)
-    t_verified = commit("t_verified", lambda: verify_fn(cand))
+    t_verified = commit(
+        "t_verified", lambda: verify_fn(pairs_op.candidate_pairs(mh_salted))
+    )
 
-    linked = [resolve(t_hamming)]
-    if exact_edges is not None:
-        linked.append(exact_edges)
+    # resolved only now, so t_verified never waits on a background stage
+    edge_sets = [resolve(df) for df in (t_hamming, *linked)]
     # orphan rescue (see operators.pairs): minhash-bucketed rows with
     # candidates but zero links anywhere get one capped exhaustive round.
-    # "Judged" = verify output + links of the other families, so rows linked
-    # by ANY family are not orphans and already-found pairs aren't redone.
+    # "Judged" = verify output + the linked edge sets, so rows linked by ANY
+    # family are not orphans and already-found pairs aren't redone.
     judged = t_verified.select("a", "b", "verified")
-    for df in linked:
+    for df in edge_sets:
         judged = judged.unionByName(
             df.select("a", "b", F.lit(True).alias("verified"))
         )
@@ -131,7 +132,7 @@ def dedup_chain(
     edges = verify.verified_edges(t_verified).unionByName(
         verify.verified_edges(t_rescued)
     )
-    for df in linked + ([contain] if contain is not None else []):
+    for df in edge_sets:
         edges = edges.unionByName(df.select("a", "b"))
     return commit("t_clusters", lambda: cc.connected_components(edges, nodes))
 
@@ -343,8 +344,8 @@ def run_pipeline(
         # censuses counted EAGERLY inside a stage's compute, so they are ready
         # when its store.write census hook fires: the anchor-gram groups
         # containment dropped at its group cap, and verify_pairs' count of
-        # captioned pairs the simhash slack gate kept away from the
-        # exact-Jaccard verify
+        # captioned minhash candidates the simhash slack gate kept away from
+        # the exact-Jaccard verify
         censuses: dict[str, int] = {}
 
         def _containment() -> DataFrame:
@@ -353,7 +354,7 @@ def run_pipeline(
             return pair_df
 
         # submitted first of the background stages: Spark's FIFO scheduler
-        # favours earlier jobs, and t_verified is the first to wait on it
+        # favours earlier jobs, and t_rescued waits on it
         t_contain = stage(
             "t_containment", _containment,
             census=(
@@ -418,8 +419,7 @@ def run_pipeline(
             lambda pairs: verify.verify_pairs(
                 pairs, t_sigs, cfg, census=censuses
             ),
-            contain=t_contain,
-            exact_edges=exact.exact_edges(t_sigs),
+            linked=(t_contain, exact.exact_edges(t_sigs)),
         )
 
         t_winners = stage("t_winners", lambda: winners.select_winners(t_clusters))

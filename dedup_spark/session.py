@@ -9,8 +9,12 @@ the caller overrides via --conf, these are local-mode ergonomics.
 from __future__ import annotations
 
 import os
+from typing import Callable, Iterator
 
-from pyspark.sql import SparkSession
+import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def _pin_blas_threads() -> None:
@@ -159,6 +163,47 @@ def py_parallelism(spark: SparkSession) -> int:
     if env:
         return max(int(env), 1)
     return max(spark.sparkContext.defaultParallelism // 2, 1)
+
+
+def map_in_groups(
+    df: DataFrame,
+    keys: list[str],
+    emit: Callable[[pd.DataFrame], pd.DataFrame],
+    schema: StructType,
+) -> DataFrame:
+    """``emit`` over batches of COMPLETE ``keys`` groups, sorted on the key.
+
+    NOT applyInPandas: a grouped map pays Arrow + pandas setup for every
+    group, and the groups here (Hamming sub-buckets, containment anchor
+    grams) are tiny and numerous, so that fixed cost dwarfs the matching
+    work. Instead: repartition on the key, sort within partitions, and run
+    ONE mapInPandas whose batches each carry many groups — the group that
+    straddles a batch boundary is carried into the next batch (batches of
+    one partition arrive in order).
+    """
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        carry: pd.DataFrame | None = None
+        for pdf in batches:
+            if carry is not None and len(carry):
+                pdf = pd.concat([carry, pdf], ignore_index=True)
+            if not len(pdf):
+                continue
+            boundary = np.ones(len(pdf), dtype=bool)
+            for k in keys:
+                boundary &= (pdf[k] == pdf[k].iloc[-1]).to_numpy()
+            carry = pdf[boundary]
+            done = pdf[~boundary]
+            if len(done):
+                yield emit(done)
+        if carry is not None and len(carry):
+            yield emit(carry)
+
+    return (
+        df.repartition(py_parallelism(df.sparkSession), *keys)
+        .sortWithinPartitions(*keys)
+        .mapInPandas(run, schema=schema)
+    )
 
 
 def iceberg_available(spark: SparkSession) -> bool:

@@ -114,7 +114,8 @@ def test_orphan_rescue_targets_only_unlinked_rows(spark):
             {"a": ["a", "a"], "b": ["b", "c"], "verified": [True, False]}
         )
     )
-    out = orphan_rescue_pairs(bands, verified).toPandas()
+    nodes = bands.select("image_id").distinct()
+    out = orphan_rescue_pairs(bands, verified, node_ids=nodes).toPandas()
     got = set(zip(out.a, out.b))
     # a,b linked → not orphans; c orphan (a-c judged already → only (b,c) new);
     # d,e both orphans → (d,e)

@@ -5,6 +5,7 @@ brute-force oracle on random buckets."""
 import numpy as np
 import pandas as pd
 import networkx as nx
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -78,26 +79,18 @@ def test_hamming_family_pairs_spark(spark):
     assert (out.hamming >= 0).all()
 
 
-def test_blockwise_labels_match_matrix_path():
-    """The O(block·m)-memory fallback is label-identical to the matrix path."""
-    from dedup_spark.operators.hamming import _labels_blockwise, _labels_matrix
+def test_oversized_subbucket_raises():
+    """Hamming salting keeps sub-buckets near bucket_cap; one above the
+    matrix bound means that invariant broke, so the kernel refuses it
+    instead of allocating an m×m matrix."""
+    from dedup_spark.operators.hamming import _MATRIX_MAX
 
-    rng = np.random.default_rng(5)
-    base = rng.integers(0, 2**63, size=40, dtype=np.uint64)
-    vals = []
-    for _ in range(500):
-        b = base[rng.integers(0, len(base))]
-        for f in rng.integers(0, 64, size=rng.integers(0, 6)):
-            b = np.uint64(b) ^ np.uint64(1 << int(f))
-        vals.append(b)
-    hv = np.array(vals, dtype=np.uint64)
-    for thr in (0, 4, 10):
-        lm = _labels_matrix(hv, thr)
-        lb = _labels_blockwise(hv, thr)
-        if lm is None or lb is None:
-            assert lm is None and lb is None
-        else:
-            assert np.array_equal(lm, lb)
+    m = _MATRIX_MAX + 1
+    ids = np.array([f"i{i:05d}" for i in range(m)])
+    hv = np.zeros(m, dtype=np.uint64)
+    out = {"a": [], "b": [], "family": [], "hamming": [], "spanning": []}
+    with pytest.raises(ValueError, match="salting"):
+        _bucket_edges(ids, hv, 4, out, "phash")
 
 
 def test_spanning_flag_marks_above_threshold_root_edges():

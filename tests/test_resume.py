@@ -169,7 +169,7 @@ def test_sync_stage_failure_reaps_async_pool(spark, tmp_path, monkeypatch):
 def test_consumed_background_stage_failure_surfaces_and_resumes(
     spark, tmp_path, monkeypatch
 ):
-    """t_containment runs beside the main chain and t_verified waits on it.
+    """t_containment runs beside the main chain and t_rescued waits on it.
     Its failure must re-raise from run_pipeline (not hang, not be
     swallowed), leave no pool thread alive, and a rerun must recompute it
     and everything downstream while skipping every stage that committed."""
@@ -194,15 +194,51 @@ def test_consumed_background_stage_failure_surfaces_and_resumes(
                 if t.name.startswith("dedup-stage")]
     survived = {f.removesuffix(".manifest.json") for f in os.listdir(root)
                 if f.endswith(".manifest.json")}
-    downstream = {"t_containment", "t_verified", "t_rescued", "t_clusters",
-                  "t_winners", "t_report"}
+    downstream = {"t_containment", "t_rescued", "t_clusters", "t_winners",
+                  "t_report"}
     assert survived and not survived & downstream
+    # t_verified does not read containment, so it committed before the
+    # failure surfaced
+    assert "t_verified" in survived
 
     monkeypatch.undo()
     run2 = run_pipeline(spark, images, root, run_id="cf")
     skipped = {r.name for r in run2.results if r.skipped}
     assert skipped == survived
     assert downstream <= {r.name for r in run2.results if not r.skipped}
+
+
+def test_verified_does_not_wait_for_containment(spark, tmp_path, monkeypatch):
+    """Containment pairs are linked edges, not verify candidates: t_verified
+    commits while t_containment is still blocked, which only lets go once
+    the t_verified commit has landed."""
+    import threading
+
+    import dedup_spark.operators.containment as containment_mod
+    from dedup_spark.sources.store import ParquetStore
+
+    verified = threading.Event()
+    real_write = ParquetStore.write
+    real_containment = containment_mod.containment_stage
+
+    def write(self, name, *args, **kwargs):
+        res = real_write(self, name, *args, **kwargs)
+        if name == "t_verified":
+            verified.set()
+        return res
+
+    def blocked_containment(sigs, cfg):
+        if not verified.wait(timeout=120):
+            raise TimeoutError("t_verified did not commit before containment")
+        return real_containment(sigs, cfg)
+
+    monkeypatch.setattr(ParquetStore, "write", write)
+    monkeypatch.setattr(containment_mod, "containment_stage", blocked_containment)
+    root = str(tmp_path / "no_wait_store")
+    run = run_pipeline(spark, gen_images(spark, N, 7), root, run_id="nw")
+    assert verified.is_set()
+    assert all(not r.skipped for r in run.results)
+    assert spark.read.parquet(f"{root}/t_clusters").count() > 0
 
 
 def test_async_stage_failure_surfaces_and_resumes(spark, tmp_path, monkeypatch):
