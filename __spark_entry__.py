@@ -5,9 +5,10 @@ entry(spark)   — flagship: the near-dup clustering engine over the sf0.001
                  LSH + SimHash + exact sha, salting, verify, connected
                  components, winner selection).
 queries()      — one entry per implemented operator from SURVEY.md §2
-                 (rows B19, B23–B33 and the text-analysis/ANN additions are
-                 DuckDB-oracled; UDF-bearing stages are rows-only and carry
-                 their real correctness gate in tests/ — see SURVEY.md §5).
+                 (rows B19, B23–B33 and the text-analysis/embedding additions
+                 are DuckDB-oracled; UDF-bearing stages are rows-only and
+                 carry their real correctness gate in tests/ — see SURVEY.md
+                 §5).
 oracle_sql()   — DuckDB-runnable ANSI twins, column names aligned.
 """
 
@@ -15,7 +16,6 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -46,7 +46,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# SQL-expressible operator registry (B19, B23–B33 + text/ANN additions)
+# SQL-expressible operator registry (B19, B23–B33 + text/embedding additions)
 # --------------------------------------------------------------------------
 
 def _content_digest_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -274,8 +274,8 @@ def _events_rollup_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # brute-force cosine top-10 for query vectors (vec_id < 8); the O(Q*N)
-    # baseline ANN — the LSH-bucketed scale path is `embedding_lsh_ann`
+    # brute-force cosine top-10 for query vectors (vec_id < 8): exact
+    # O(Q*N) search over a small broadcast query side
     e = _emb(spark, sf_dir).select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
     )
@@ -310,9 +310,7 @@ def _embedding_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fixture runs the exact kernel — at sf0.01 the corpus is near-random
     # (max pair cosine 0.51), angles where no honest LSH recalls 1.0 — so
     # like ngram_jaccard_pairs it is an oracle-scale verification kernel,
-    # never a bench/headline path. The scale path for this family is
-    # operators.ann.lsh_candidates + exact rerank with the same threshold
-    # (recall/cost pinned by ann_recall_report and tests/test_ann.py).
+    # never a bench/headline path.
     e = _emb(spark, sf_dir).select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
     )
@@ -592,19 +590,6 @@ def _images_pipeline_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(root, ignore_errors=True)
 
 
-def _images_resized_thumbs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # multimodal: decode → bilinear resize → re-encode over the binary
-    # payload column (operators.multimodal; bytes summarized by md5 so the
-    # driver row check stays light)
-    from dedup_spark.operators.multimodal import resize_images
-    from dedup_spark.sources.gen_images import gen_images
-
-    thumbs = resize_images(gen_images(spark, 300, 7).where("w > 0"), 16, 16)
-    return thumbs.select(
-        "image_id", "w", "h", "fmt", F.md5("bytes").alias("thumb_md5")
-    )
-
-
 def _pixel_psnr_invariant(spark: SparkSession, sf_dir: str) -> DataFrame:
     # B37 / input_hint per-row invariant: decode the stored payload, push the
     # pixels through the lossy qraw codec cycle, and assert PSNR >= 40dB —
@@ -662,127 +647,6 @@ def _pixel_psnr_invariant(spark: SparkSession, sf_dir: str) -> DataFrame:
     return per_row.unionByName(verdict)
 
 
-def _image_feature_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # multimodal: decode → fixed-width feature extraction (mean/std RGB,
-    # luma histogram, edge density) — map-only, bytes touched once. The
-    # array-valued features stay in the operator's schema; the registry
-    # projection digests them to scalars (driver canonicalizer sorts values,
-    # and lists are unhashable in pandas' factorize)
-    from dedup_spark.operators.multimodal import image_features
-    from dedup_spark.sources.gen_images import gen_images
-
-    feats = image_features(gen_images(spark, 300, 7).where("w > 0"))
-    return feats.select(
-        "image_id",
-        F.md5(F.to_json(F.transform("mean_rgb", lambda x: F.round(x, 6))))
-        .alias("mean_rgb_digest"),
-        F.md5(F.to_json(F.transform("std_rgb", lambda x: F.round(x, 6))))
-        .alias("std_rgb_digest"),
-        F.md5(F.to_json(F.transform("luma_hist", lambda x: F.round(x, 6))))
-        .alias("luma_hist_digest"),
-        F.round("aspect", 6).alias("aspect"),
-        F.round("edge_density", 6).alias("edge_density"),
-    )
-
-
-def _embedding_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # LSH-bucketed ANN scale path: multi-table sign-random-projection with
-    # query-side multi-probe, exact-cosine rerank of bucket candidates only
-    # (operators.ann.lsh_topk). Same (query_id, neighbor_id, rank) shape as
-    # the brute-force `embedding_topk`, so recall is measurable — pinned in
-    # tests/test_ann.py against the exact top-10 at sf0.01.
-    from dedup_spark.operators.ann import lsh_topk
-
-    e = _emb(spark, sf_dir).select("vec_id", F.col("embedding").alias("v"))
-    q = e.where("vec_id < 8").select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    # 16 tables x 6 bits ≈ N/2^6 rows per bucket at sf0.01 — scale bits with
-    # log2(N) to hold occupancy; measured recall 0.95 vs exact top-10 here
-    return lsh_topk(e, q, dim=64, k=10, n_tables=16, bits=6)
-
-
-def _embedding_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # IVF coarse-quantizer ANN (operators.ann.ivf_topk): driver-trained
-    # bounded k-means, distributed 2-way multi-assignment (rows near a
-    # Voronoi boundary post to both adjacent lists), nprobe probing, exact
-    # rerank. Measured recall 0.95 on this near-random corpus at 12/32
-    # lists (was 0.775 single-assignment) — pinned in tests/test_ann.py
-    from dedup_spark.operators.ann import ivf_topk
-
-    e = _emb(spark, sf_dir).select("vec_id", F.col("embedding").alias("v"))
-    q = e.where("vec_id < 8").select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    return ivf_topk(e, q, dim=64, k=10, n_centroids=32, nprobe=12)
-
-
-def _audio_feature_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # multimodal audio: deterministic synthetic rawpcm clips (seeded tones +
-    # noise, generated distributed via mapInPandas — no driver data) →
-    # loudness / zero-cross / spectral-centroid / clipping quality signals
-    # (operators.multimodal.audio_features; real codecs are registered
-    # behind the same decode signature in deployment)
-    from dedup_spark.operators.multimodal import audio_features, encode_rawpcm
-
-    def gen(batches):
-        for pdf in batches:
-            rows = {"audio_id": [], "bytes": [], "fmt": []}
-            for i in pdf["id"]:
-                i = int(i)
-                rng = np.random.default_rng(i)
-                rate = 8000
-                t = np.arange(rate // 2) / rate
-                f = 100.0 + (i % 40) * 50.0
-                x = 0.4 * np.sin(2 * np.pi * f * t)
-                x = x + 0.05 * rng.standard_normal(len(t))
-                rows["audio_id"].append(f"a{i:05d}")
-                rows["bytes"].append(encode_rawpcm(np.clip(x, -1, 1), rate))
-                rows["fmt"].append("rawpcm")
-            yield pd.DataFrame(rows)
-
-    clips = spark.range(200).repartition(8).mapInPandas(
-        gen, schema="audio_id string, bytes binary, fmt string"
-    )
-    return audio_features(clips)
-
-
-def _video_frame_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # multimodal video: deterministic synthetic rawvid clips (seeded gradient
-    # frames, generated distributed via mapInPandas) → every-Nth-frame
-    # sampling through operators.multimodal.sample_frames (one binary row
-    # fans out to many frame rows). Frame payloads are projected to a
-    # digest scalar for the driver canonicalizer; the engine-internal
-    # schema keeps the raw frame bytes for downstream decode/phash.
-    from dedup_spark.operators.multimodal import encode_rawvid, sample_frames
-
-    def gen(batches):
-        for pdf in batches:
-            rows = {"video_id": [], "bytes": [], "fmt": []}
-            for i in pdf["id"]:
-                i = int(i)
-                rng = np.random.default_rng(1000 + i)
-                n_frames, w, h = 24 + (i % 3) * 12, 32, 24
-                base = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
-                frames = [
-                    ((base.astype(np.int16) + 5 * k) % 256).astype(np.uint8)
-                    for k in range(n_frames)
-                ]
-                rows["video_id"].append(f"v{i:04d}")
-                rows["bytes"].append(encode_rawvid(frames))
-                rows["fmt"].append("rawvid")
-            yield pd.DataFrame(rows)
-
-    clips = spark.range(60).repartition(8).mapInPandas(
-        gen, schema="video_id string, bytes binary, fmt string"
-    )
-    frames = sample_frames(clips, every_n=12)
-    return frames.select(
-        "video_id", "frame_idx", "w", "h", "fmt",
-        F.md5(F.col("bytes")).alias("frame_digest"),
-    )
-
-
 def _pipeline_resume_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # B38 driver-visible row (VERDICT r2 #5): run the checkpointed pipeline
     # TWICE against one store — the first run computes every stage, the
@@ -827,56 +691,6 @@ def _pipeline_resume_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(root, ignore_errors=True)
 
 
-def _ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # driver-visible ANN quality + cost row (VERDICT r3 #2/#6): recall of
-    # each approximate path vs the exact brute-force top-10, computed
-    # in-Spark over the same sf embeddings, PLUS the rerank cost (mean
-    # candidates per query) so the recall/cost trade of multi-probe and
-    # 2-way IVF assignment is pinned where the driver can see it — recall
-    # floors live in tests/test_ann.py, this makes them observable per run.
-    from dedup_spark.operators.ann import (
-        brute_force_topk, ivf_candidates, ivf_topk, lsh_candidates, lsh_topk,
-    )
-
-    e = _emb(spark, sf_dir).select("vec_id", F.col("embedding").alias("v"))
-    q = e.where("vec_id < 8").select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    exact = brute_force_topk(e, q, k=10).localCheckpoint()
-    n_exact = exact.count()
-    n_queries = exact.select("query_id").distinct().count()
-
-    paths = {
-        "srp_lsh": (
-            lsh_topk(e, q, dim=64, k=10, n_tables=16, bits=6),
-            lsh_candidates(e, q, dim=64, n_tables=16, bits=6),
-        ),
-        "ivf": (
-            ivf_topk(e, q, dim=64, k=10, n_centroids=32, nprobe=12),
-            ivf_candidates(e, q, dim=64, n_centroids=32, nprobe=12),
-        ),
-    }
-    data = []
-    for name, (topk, cand) in paths.items():
-        hits = topk.join(
-            exact, ["query_id", "neighbor_id"], "left_semi"
-        ).count()
-        n_cand = cand.count()
-        data.append(
-            (
-                name,
-                round(hits / n_exact, 4) if n_exact else 0.0,
-                n_queries,
-                round(n_cand / n_queries, 2) if n_queries else 0.0,
-            )
-        )
-    return spark.createDataFrame(
-        data,
-        "path string, recall double, n_queries long, "
-        "mean_candidates_per_query double",
-    )
-
-
 def _lsh_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # B18 driver-visible row: the hot-bucket census the salting stage logs
     # (bucket_size, fanout, est_lost_pairs) over a planted hot-bucket input —
@@ -916,7 +730,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "lang_stopword_profile": _lang_stopword_profile,      # text analysis
         "events_rollup_cube": _events_rollup_cube,            # B26 rollup
         "ngram_jaccard_pairs": _ngram_jaccard_pairs,          # near-dup scan
-        "embedding_topk": _embedding_topk,                    # ANN baseline
+        "embedding_topk": _embedding_topk,                    # exact cosine top-k
         "embedding_cosine_pairs": _embedding_cosine_pairs,    # cosine dup family
         "bpe_token_estimate": _bpe_token_estimate,            # token budgets
         "event_sessionization": _event_sessionization,        # gap sessions
@@ -931,16 +745,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "docs_near_dup_clusters": _docs_near_dup_clusters,    # B10-B36 slice
         "docs_minhash_signatures": _docs_minhash_signatures,  # B10-B12
         "images_pipeline_report": _images_pipeline_report,    # full engine
-        "embedding_lsh_ann": _embedding_lsh_ann,              # ANN scale path
-        "embedding_ivf_ann": _embedding_ivf_ann,              # ANN IVF path
-        "images_resized_thumbs": _images_resized_thumbs,      # multimodal resize
-        "image_feature_vectors": _image_feature_vectors,      # multimodal features
         "pixel_psnr_invariant": _pixel_psnr_invariant,        # B37 invariant
         "lsh_skew_report": _lsh_skew_report,                  # B18 skew census
-        "ann_recall_report": _ann_recall_report,              # ANN recall+cost
         "pipeline_resume_report": _pipeline_resume_report,    # B38 resume proof
-        "audio_feature_signals": _audio_feature_signals,      # multimodal audio
-        "video_frame_samples": _video_frame_samples,          # multimodal video
     }
 
 

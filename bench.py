@@ -28,6 +28,23 @@ import tempfile
 import time
 
 
+# Headline registry queries, timed over the driver testdata.
+# ngram_jaccard_pairs is deliberately NOT here: it is a per-source all-pairs
+# oracle fixture (O(n²/buckets)) kept for the sf0.01 DuckDB check only; the
+# engine's scalable text near-dup path in this list is docs_near_dup_clusters
+# (LSH star candidates + verify + CC).
+HEADLINE = [
+    "docs_near_dup_clusters",   # text dedup engine end-to-end
+    "content_digest_groups",    # exact-hash groupBy
+    "winner_selection_docs",    # window winner
+    "prefix_rollup_docs",       # hierarchical rollup
+    "latest_event_wins",        # event dedup window (100k rows)
+    "events_agg_metrics",       # metrics aggregates
+    "embedding_topk",           # brute-force cosine top-k
+    "docs_containment_pairs",   # suffix-array containment
+]
+
+
 def _sf_of(sf_dir: str) -> float:
     base = os.path.basename(sf_dir.rstrip("/"))
     try:
@@ -116,21 +133,6 @@ def run_bench(cpus: int | None = None, sf_dir: str | None = None,
         shutil.rmtree(root, ignore_errors=True)
 
     # -- headline registry queries over driver testdata -------------------
-    # ngram_jaccard_pairs is deliberately NOT here: it is a per-source
-    # all-pairs oracle fixture (O(n²/buckets)) kept for the sf0.01 DuckDB
-    # check only; the engine's scalable text near-dup path in this list is
-    # docs_near_dup_clusters (LSH star candidates + verify + CC).
-    headline = [
-        "docs_near_dup_clusters",   # text dedup engine end-to-end
-        "content_digest_groups",    # exact-hash groupBy
-        "winner_selection_docs",    # window winner
-        "prefix_rollup_docs",       # hierarchical rollup
-        "latest_event_wins",        # event dedup window (100k rows)
-        "events_agg_metrics",       # metrics aggregates
-        "embedding_topk",           # brute-force ANN baseline
-        "embedding_lsh_ann",        # LSH-bucketed ANN scale path
-        "docs_containment_pairs",   # suffix-array containment
-    ]
     # every multi-second query gets the flagship's best-of-2 protection
     # (VERDICT r4 #1): in the driver's BENCH_r04 window the two single-run
     # doc queries landed at ~2x the builder's same-code windows (11.73 /
@@ -139,7 +141,7 @@ def run_bench(cpus: int | None = None, sf_dir: str | None = None,
     # JSON next to the flagship's.
     best_of = {"docs_near_dup_clusters": 2, "docs_containment_pairs": 2}
     query_attempts: dict[str, list[float]] = {}
-    for name in headline:
+    for name in HEADLINE:
         atts = []
         for _ in range(best_of.get(name, 1)):
             t0 = time.perf_counter()

@@ -39,18 +39,3 @@ def simhash_batch(shingle_lists: list[np.ndarray]) -> np.ndarray:
     out[nonempty] = packed.view("<u8").ravel()
     return out
 
-
-def hamming_bands(h: np.ndarray, bands: int, band_bits: int) -> np.ndarray:
-    """Split 64-bit hashes into ``bands`` keys of ``band_bits`` bits each.
-
-    Returns (n, bands) uint64; key j = bits [j*band_bits, (j+1)*band_bits).
-    Two hashes within Hamming distance d collide in ≥ bands - d bands, so any
-    pair with d < bands shares at least one band (pigeonhole) — LSH recall 1.0
-    for d ≤ bands - 1; the verify threshold does the precision work.
-    """
-    h = h.astype(np.uint64, copy=False)
-    mask = np.uint64((1 << band_bits) - 1)
-    out = np.empty((h.shape[0], bands), dtype=np.uint64)
-    for j in range(bands):
-        out[:, j] = (h >> np.uint64(j * band_bits)) & mask
-    return out

@@ -5,9 +5,9 @@ For a Hamming family the *verification predicate itself* (bit_count(x^y) <=
 threshold) needs only the two 64-bit hashes, so generating candidate pair
 ROWS and shuffling them to a join is pure overhead. Instead, each salted band
 bucket is verified in-worker: a vectorized numpy popcount over the bucket
-members' hashes, then in-bucket connected components, emitting one spanning
-edge per non-root member. Compared to star-candidates + join-verify +
-orphan-rescue this
+members' hashes, then in-bucket connected components, emitting one edge
+from each non-root member to its component root. Compared to
+star-candidates + join-verify + orphan-rescue this
 
 - is EXACT within a bucket (no representative weak-link loss at all — the
   failure mode that forced the rescue pass for these families);
@@ -23,11 +23,9 @@ land in different salt sub-buckets loses that bucket; recovery relies on the
 other bands/combos (28 for phash) and, for dense true clusters, on the
 transitive closure — asserted by the golden gate.
 
-Emitted spanning edges may join two members whose direct distance exceeds
-the family threshold (connectivity via intermediate members is what makes
-them one component); such rows carry ``spanning = true`` so pair-level
-consumers (reports, precision audits) can separate "verified direct match"
-from "component spanning link". Cluster output is identical either way.
+A root edge may join two members whose direct distance exceeds the family
+threshold: intermediate members connect them. Its ``hamming`` column then
+reads above the threshold; cluster output is the same.
 
 Batching is session.map_in_groups on the bucket key, as in
 operators.containment: one mapInPandas whose batches carry many complete
@@ -41,7 +39,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BooleanType,
     IntegerType,
     StringType,
     StructField,
@@ -59,7 +56,6 @@ PAIRS_SCHEMA = StructType(
         StructField("b", StringType(), False),
         StructField("family", StringType(), False),
         StructField("hamming", IntegerType(), False),
-        StructField("spanning", BooleanType(), False),
     ]
 )
 
@@ -100,14 +96,15 @@ def _labels_matrix(hv: np.ndarray, thr: int) -> np.ndarray | None:
 
 def _bucket_edges(ids: np.ndarray, hv: np.ndarray, thr: int,
                   out: dict, family: str) -> None:
-    """Emit a SPANNING edge set of the bucket's threshold graph.
+    """Emit one edge per non-root member to its component root in the
+    bucket's threshold graph.
 
     In-bucket connected components by vectorized min-label propagation;
     each non-root member emits one edge to its component root. A dense true
     cluster of m members costs m-1 emitted rows instead of ~m²/2 — the
     downstream global CC only needs connectivity, and the transitive
-    closure it takes is identical. (A root edge may itself span > thr; it
-    is flagged ``spanning`` — see module docstring.)
+    closure it takes is identical. (A root edge may itself exceed thr —
+    see module docstring.)
     """
     m = len(ids)
     if m < 2:
@@ -120,7 +117,6 @@ def _bucket_edges(ids: np.ndarray, hv: np.ndarray, thr: int,
             out["b"].append(b)
             out["family"].append(family)
             out["hamming"].append(d)
-            out["spanning"].append(False)
         return
     if m > _MATRIX_MAX:
         raise ValueError(
@@ -143,7 +139,6 @@ def _bucket_edges(ids: np.ndarray, hv: np.ndarray, thr: int,
         out["b"].append(ids[i])
         out["family"].append(family)
         out["hamming"].append(d)
-        out["spanning"].append(d > thr)
 
 
 def hamming_family_pairs(
@@ -151,12 +146,10 @@ def hamming_family_pairs(
     thresholds: dict[str, int] | None = None,
     cfg: PipelineConfig = DEFAULT_CONFIG,
 ) -> DataFrame:
-    """salted band rows (hamming families) → verified
-    (a, b, family, hamming, spanning).
+    """salted band rows (hamming families) → verified (a, b, family, hamming).
 
     Distinct over (a, b): a pair passing in several bands/families reports
-    its smallest distance once (and that row's spanning flag — False
-    whenever any band verified the pair directly).
+    its smallest distance once.
     """
     if thresholds is None:
         thresholds = {
@@ -173,7 +166,7 @@ def hamming_family_pairs(
         # groupby would pay frame-construction per bucket. The batch arrives
         # sorted on the bucket key, so detect runs vectorized and slice.
         # (One image appears at most once per bucket by construction.)
-        out = {"a": [], "b": [], "family": [], "hamming": [], "spanning": []}
+        out = {"a": [], "b": [], "family": [], "hamming": []}
         n = len(pdf)
         fam = pdf["family"].to_numpy()
         bi = pdf["band_idx"].to_numpy()
@@ -202,11 +195,5 @@ def hamming_family_pairs(
         .agg(
             F.min_by("family", "hamming").alias("family"),
             F.min("hamming").cast("int").alias("hamming"),
-            # false if ANY contributing band verified the pair directly —
-            # NOT min_by(spanning, hamming): hamming distances are not
-            # comparable across families, so a family-A spanning edge with a
-            # smaller distance must not mask a family-B direct match
-            # (ADVICE r2)
-            F.min(F.col("spanning").cast("int")).cast("boolean").alias("spanning"),
         )
     )

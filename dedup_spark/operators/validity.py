@@ -51,7 +51,3 @@ def valid_predicate() -> Column:
 def filter_valid(df: DataFrame) -> DataFrame:
     return df.where(valid_predicate())
 
-
-def invalid_rows(df: DataFrame) -> DataFrame:
-    """The S9 analog of dedup's empty-file report — kept for metrics."""
-    return df.where(~valid_predicate()).select("image_id", "w", "h", "fmt")

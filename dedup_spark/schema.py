@@ -3,10 +3,7 @@
 from __future__ import annotations
 
 from pyspark.sql.types import (
-    ArrayType,
     BinaryType,
-    BooleanType,
-    DoubleType,
     IntegerType,
     LongType,
     StringType,
@@ -25,46 +22,5 @@ IMAGES_SCHEMA = StructType(
         StructField("fmt", StringType(), False),
         StructField("caption", StringType(), False),
         StructField("phash", LongType(), False),
-    ]
-)
-
-SIGS_SCHEMA = StructType(
-    [
-        StructField("image_id", StringType(), False),
-        StructField("sha256", StringType(), False),
-        StructField("caption_norm", StringType(), False),
-        StructField("n_shingles", IntegerType(), False),
-        StructField("minhash", ArrayType(LongType(), False), False),
-        StructField("simhash", LongType(), False),
-        StructField("phash", LongType(), False),
-        StructField("depth", IntegerType(), False),
-    ]
-)
-
-PAIRS_SCHEMA = StructType(
-    [
-        StructField("a", StringType(), False),
-        StructField("b", StringType(), False),
-        StructField("family", StringType(), False),
-    ]
-)
-
-VERIFIED_PAIRS_SCHEMA = StructType(
-    [
-        StructField("a", StringType(), False),
-        StructField("b", StringType(), False),
-        StructField("family", StringType(), False),
-        StructField("jaccard", DoubleType(), True),
-        StructField("hamming_sim", IntegerType(), True),
-        StructField("hamming_ph", IntegerType(), True),
-        StructField("verified", BooleanType(), False),
-    ]
-)
-
-CLUSTERS_SCHEMA = StructType(
-    [
-        StructField("image_id", StringType(), False),
-        StructField("cluster_id", StringType(), False),
-        StructField("is_winner", BooleanType(), False),
     ]
 )

@@ -11,6 +11,7 @@ import duckdb
 import pytest
 
 import __spark_entry__ as entrymod
+import bench
 
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = [
@@ -44,6 +45,13 @@ def _normalize(df):
     return cols, sorted(map(repr, rows))
 
 
+def test_bench_headline_is_registered():
+    # bench.py times reg[name] for every headline name; a registry deletion
+    # that leaves a stale name would only surface as a KeyError mid-bench
+    missing = [n for n in bench.HEADLINE if n not in entrymod.queries()]
+    assert not missing, f"bench.HEADLINE names unregistered queries: {missing}"
+
+
 def test_entry_returns_rows(spark):
     df = entrymod.entry(spark)
     assert df.count() > 0
@@ -74,5 +82,5 @@ def test_rows_only_queries_execute(spark, name):
     # replicate the driver's canonicalizer: sort rows by every column. An
     # array/list-valued column makes pandas sort_values raise (unhashable
     # list in factorize) and the driver records the query as `err` forever
-    # (the r1 failure mode for docs_minhash_signatures/image_feature_vectors)
+    # (the r1 failure mode for docs_minhash_signatures)
     pdf.sort_values(by=list(pdf.columns))

@@ -1,4 +1,4 @@
-"""In-bucket exact Hamming verification (operators.hamming): spanning-edge
+"""In-bucket exact Hamming verification (operators.hamming): root-edge
 connectivity equals the threshold graph's components; Spark path matches a
 brute-force oracle on random buckets."""
 
@@ -37,7 +37,7 @@ def test_bucket_edges_components_match_bruteforce(seed, m, thr):
         vals.append(np.uint64(b))
     hv = np.array(vals, dtype=np.uint64)
     ids = np.array([f"n{i:03d}" for i in range(m)])
-    out = {"a": [], "b": [], "family": [], "hamming": [], "spanning": []}
+    out = {"a": [], "b": [], "family": [], "hamming": []}
     _bucket_edges(ids.copy(), hv.copy(), thr, out, "simhash")
 
     g = nx.Graph()
@@ -88,26 +88,9 @@ def test_oversized_subbucket_raises():
     m = _MATRIX_MAX + 1
     ids = np.array([f"i{i:05d}" for i in range(m)])
     hv = np.zeros(m, dtype=np.uint64)
-    out = {"a": [], "b": [], "family": [], "hamming": [], "spanning": []}
+    out = {"a": [], "b": [], "family": [], "hamming": []}
     with pytest.raises(ValueError, match="salting"):
         _bucket_edges(ids, hv, 4, out, "phash")
-
-
-def test_spanning_flag_marks_above_threshold_root_edges():
-    """A chain a—b—c (each link ≤ thr, a—c > thr) emits c→root(a) flagged."""
-    from dedup_spark.operators.hamming import _bucket_edges
-
-    a = np.uint64(0)
-    b = np.uint64((1 << 3) - 1)          # hamming(a,b)=3
-    c = np.uint64((1 << 6) - 1)          # hamming(b,c)=3, hamming(a,c)=6
-    ids = np.array(["a", "b", "c"])
-    hv = np.array([a, b, c], dtype=np.uint64)
-    out = {"a": [], "b": [], "family": [], "hamming": [], "spanning": []}
-    _bucket_edges(ids, hv, 3, out, "simhash")
-    rows = {(x, y): (h, s) for x, y, h, s in
-            zip(out["a"], out["b"], out["hamming"], out["spanning"])}
-    assert rows[("a", "b")] == (3, False)
-    assert rows[("a", "c")] == (6, True)  # root edge spans > thr, flagged
 
 
 def test_planted_hot_bucket_bounded_memory(spark):

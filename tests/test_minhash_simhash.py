@@ -10,7 +10,7 @@ from dedup_spark.functions.minhash import (
     minhash_batch,
     perm_params,
 )
-from dedup_spark.functions.simhash import hamming_bands, simhash_batch
+from dedup_spark.functions.simhash import simhash_batch
 
 A, B = perm_params(DEFAULT_CONFIG)
 
@@ -67,13 +67,36 @@ def test_simhash_symmetry_and_locality():
     assert simhash_batch([s1])[0] == h[0]  # batch-independent
 
 
-def test_hamming_bands_pigeonhole():
+def test_hamming_bands_pigeonhole(spark):
+    """The JVM simhash banding the pipeline runs (banding._hamming_bands_df)
+    slices each hash into disjoint bands, so two hashes at Hamming d < bands
+    share ≥ bands - d band keys (exactly that many when the d flipped bits
+    sit in d different bands, the worst case)."""
+    import pandas as pd
+
+    from dedup_spark.operators.banding import _hamming_bands_df
+
+    bands, band_bits = DEFAULT_CONFIG.simhash_bands, DEFAULT_CONFIG.simhash_band_bits
     rng = np.random.default_rng(6)
-    base = rng.integers(0, 2**64, dtype=np.uint64)
-    for d in range(0, 4):  # d < bands=4 ⇒ guaranteed shared band
-        flip = np.uint64(0)
-        for bit in rng.choice(64, size=d, replace=False):
-            flip |= np.uint64(1) << np.uint64(bit)
-        h = np.array([base, base ^ flip], dtype=np.uint64)
-        bk = hamming_bands(h, 4, 16)
-        assert (bk[0] == bk[1]).sum() >= 4 - d
+    ids, vals = [], []
+    for trial in range(5):
+        base = rng.integers(0, 2**64, dtype=np.uint64)
+        for d in range(bands):  # d < bands ⇒ guaranteed shared band
+            flip = 0
+            for band in rng.choice(bands, size=d, replace=False):
+                flip |= 1 << int(band * band_bits + rng.integers(band_bits))
+            for side, h in (("x", int(base)), ("y", int(base) ^ flip)):
+                ids.append(f"{trial}-{d}-{side}")
+                vals.append(h - (1 << 64) if h >= 1 << 63 else h)
+    df = spark.createDataFrame(pd.DataFrame({"image_id": ids, "simhash": vals}))
+    got = _hamming_bands_df(df, "simhash", "simhash", bands, band_bits).toPandas()
+    keys = {
+        iid: set(zip(g.band_idx, g.band_key)) for iid, g in got.groupby("image_id")
+    }
+    for iid, v in zip(ids, vals):  # the bands reassemble the hash
+        assert len(keys[iid]) == bands
+        assert sum(int(k) << (j * band_bits) for j, k in keys[iid]) == v % (1 << 64)
+    for trial in range(5):
+        for d in range(bands):
+            x, y = keys[f"{trial}-{d}-x"], keys[f"{trial}-{d}-y"]
+            assert len(x & y) == bands - d
