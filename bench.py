@@ -61,6 +61,7 @@ def run_bench(cpus: int | None = None, sf_dir: str | None = None,
 
     from dedup_spark.session import get_spark
     from dedup_spark.sources.gen_images import BENCH_SEED, gen_images
+    from perfbench import procfs
 
     spark = get_spark(app=f"bench_local{cpus}", master=f"local[{cpus}]")
     import __spark_entry__ as entrymod
@@ -107,17 +108,30 @@ def run_bench(cpus: int | None = None, sf_dir: str | None = None,
         # best-of-2 (VERDICT r2 #8): single flagship runs on this host carry
         # a known JVM/GC noise window (1,879–2,068 img/s observed across r2
         # sweeps); two fresh-store runs and taking the min damps it. Both
-        # attempts are reported in the JSON (ADVICE r3).
-        attempts = []
+        # attempts are reported in the JSON (ADVICE r3), with the best
+        # attempt's stage ledger and a host stamp: a fixed numpy loop's time
+        # and the hypervisor's steal share over the flagship, so a slow host
+        # window can be told apart from slow code.
+        host = {"calib_s": round(procfs.calibrate(), 4)}
+        cpu0 = procfs.cpu_times()
+        attempts, ledgers = [], []
         for i in range(2):
             run_root = f"{root}/run{i}"
             t0 = time.perf_counter()
-            run_pipeline(
+            run = run_pipeline(
                 spark, spark.read.parquet(input_path), run_root, run_id="bench"
             )
             spark.read.parquet(f"{run_root}/t_report").count()
             attempts.append(round(time.perf_counter() - t0, 3))
+            ledgers.append([
+                {"name": r.name, "seconds": r.seconds, "rows": r.rows,
+                 "skipped": r.skipped}
+                for r in run.results
+            ])
             shutil.rmtree(run_root, ignore_errors=True)
+        host["steal_share"] = round(
+            procfs.steal_share(cpu0, procfs.cpu_times()), 4
+        )
         timings["images_pipeline"] = min(attempts)
         if not quiet:
             print(f"  images_pipeline: best-of-2 {attempts} -> "
@@ -169,6 +183,11 @@ def run_bench(cpus: int | None = None, sf_dir: str | None = None,
         # both flagship attempts, in run order (post-warm-up, so spread =
         # run-to-run noise); the headline takes min() — see flagship block
         "images_pipeline_attempts": attempts,
+        # per-stage seconds/rows of the best attempt, in stage-submission
+        # order; background stages overlap the main chain, so their seconds
+        # are wall time under contention and do not sum to the attempt
+        "images_pipeline_stages": ledgers[attempts.index(min(attempts))],
+        "host": host,
         # best-of-2 attempts for the multi-second registry queries
         "query_attempts": query_attempts,
     }

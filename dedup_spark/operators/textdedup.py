@@ -39,7 +39,7 @@ def text_signatures(
 def text_verify(
     pairs: DataFrame, sigs: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG
 ) -> DataFrame:
-    """The chain's verify step for text rows (no slack census)."""
+    """The chain's verify step for text rows."""
     return verify.verify_pairs(pairs, sigs, cfg)
 
 

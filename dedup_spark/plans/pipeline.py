@@ -76,7 +76,9 @@ def dedup_chain(
 
     salted LSH bands → exact in-bucket Hamming pairs (simhash; phash where
     the rows have pixels) → minhash star candidates → ``verify_fn`` →
-    orphan rescue → connected components.
+    orphan rescue → connected components. Both callers' ``verify_fn`` runs
+    ``verify.verify_pairs`` (one join pass, exact Jaccard for every pair),
+    and t_rescued runs the same verify over the orphan pairs.
 
     ``commit(name, compute)`` materializes each intermediate and returns the
     frame to consume, or a handle to it (see ``resolve``) for a stage
@@ -236,8 +238,8 @@ def run_pipeline(
         fut = pool.submit(job)
         pending.append((name, fut))
 
-        # read once, and only if a consumer asks: a read infers the schema
-        # with a Spark job
+        # read once, and only if a consumer asks (the commit may still be
+        # running when the handle is made)
         @functools.cache
         def table() -> DataFrame:
             fut.result()
@@ -343,9 +345,7 @@ def run_pipeline(
 
         # censuses counted EAGERLY inside a stage's compute, so they are ready
         # when its store.write census hook fires: the anchor-gram groups
-        # containment dropped at its group cap, and verify_pairs' count of
-        # captioned minhash candidates the simhash slack gate kept away from
-        # the exact-Jaccard verify
+        # containment dropped at its group cap
         censuses: dict[str, int] = {}
 
         def _containment() -> DataFrame:
@@ -386,14 +386,6 @@ def run_pipeline(
         )
 
         def commit(name: str, compute) -> DataFrame | Callable:
-            if name == "t_verified":
-                return stage(
-                    name, compute,
-                    census=(
-                        "verify_slack_skips",
-                        lambda out, rows: censuses["slack_skips"],
-                    ),
-                )
             out = stage(name, compute, background=name == "t_hamming")
             if name == "t_salted":
                 # the skew report is derived FROM the committed salted table —
@@ -416,9 +408,7 @@ def run_pipeline(
         # time than a materialization barrier costs
         t_clusters = dedup_chain(
             t_sigs, cfg, commit,
-            lambda pairs: verify.verify_pairs(
-                pairs, t_sigs, cfg, census=censuses
-            ),
+            lambda pairs: verify.verify_pairs(pairs, t_sigs, cfg),
             linked=(t_contain, exact.exact_edges(t_sigs)),
         )
 

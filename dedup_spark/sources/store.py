@@ -10,7 +10,9 @@ Two backends behind one interface:
 - ``ParquetStore``: directory-per-table with an atomically renamed
   ``manifest.json`` AFTER a successful parquet commit — the sandbox fallback
   (no Iceberg jar on disk, SURVEY.md §7.0). A stage is "done" iff its
-  manifest exists and its config fingerprint matches.
+  manifest exists, its config fingerprint matches and it carries the table's
+  schema: every read of a committed table passes that schema to Spark, so
+  neither a fresh commit nor a resumed stage pays a schema-inference job.
 
 Only the stage TABLES go through Spark. Manifests, the lineage log and the
 approximation censuses (carried inside each stage's manifest) are small
@@ -31,6 +33,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 # Stage commits may run on a small thread pool (plans.pipeline runs leaf
 # diagnostic stages concurrently with the main chain); the only shared
@@ -60,17 +63,22 @@ class ParquetStore:
     def _manifest(self, name: str) -> str:
         return os.path.join(self.root, f"{name}.manifest.json")
 
-    # --- stage lifecycle ---
-    def is_done(self, name: str) -> bool:
+    def _load_manifest(self, name: str) -> dict | None:
         mf = self._manifest(name)
         if not os.path.exists(mf):
-            return False
+            return None
         with open(mf) as f:
-            m = json.load(f)
+            return json.load(f)
+
+    # --- stage lifecycle ---
+    def is_done(self, name: str) -> bool:
+        m = self._load_manifest(name)
         return (
-            m.get("fingerprint") == self.fingerprint
+            m is not None
+            and m.get("fingerprint") == self.fingerprint
             and m.get("run_id") == self.run_id
             and m.get("status") == "done"
+            and "schema" in m
         )
 
     def write(self, name: str, df: DataFrame,
@@ -80,7 +88,9 @@ class ParquetStore:
         ``census=(census_name, fn)`` stores ``fn(committed_df, rows)`` in the
         manifest as ``"census": {census_name: value}``. The manifest rename
         is the commit, so "done" implies census-present and the lineage log
-        (which appends every manifest) is the one recall-budget view."""
+        (which appends every manifest) is the one recall-budget view. The
+        manifest also records the table's schema, which ``read`` passes to
+        Spark in place of inferring it from the files."""
         out, extra = self._commit_table(name, df)
         rows = self._write_metrics(name, out)
         manifest = {
@@ -89,6 +99,7 @@ class ParquetStore:
             "fingerprint": self.fingerprint,
             "status": "done",
             "rows": rows,
+            "schema": df.schema.jsonValue(),
             **extra,
         }
         if census is not None:
@@ -106,10 +117,13 @@ class ParquetStore:
         """Write the stage table → (committed table, extra manifest keys)."""
         path = self._table_dir(name)
         df.write.mode("overwrite").parquet(path)
-        return df.sparkSession.read.parquet(path), {}
+        return df.sparkSession.read.schema(df.schema).parquet(path), {}
 
     def read(self, spark: SparkSession, name: str) -> DataFrame:
-        return spark.read.parquet(self._table_dir(name))
+        """A committed table, read with the schema its manifest records (a
+        file-source read comes back nullable, as an inferred one does)."""
+        schema = StructType.fromJson(self._load_manifest(name)["schema"])
+        return spark.read.schema(schema).parquet(self._table_dir(name))
 
     # --- lineage + metrics ---
     def _append_lineage(self, manifest: dict) -> None:

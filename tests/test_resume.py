@@ -61,17 +61,18 @@ def test_mid_pipeline_resume_recomputes_only_downstream(spark, first_run):
 
 def test_recomputed_stage_rewrites_its_census(spark, first_run):
     """A census rides in its stage's manifest, so a lost manifest loses
-    exactly one stage: the rerun recomputes ONLY t_verified and commits the
-    same verify slack-gate census again. (Runs before the config-change
-    test, which rewrites this store under another run_id.)"""
+    exactly one stage: the rerun recomputes ONLY the leaf t_skew_report and
+    commits the same salting-loss census again. (Runs before the
+    config-change test, which rewrites this store under another run_id.)"""
     root, _, _ = first_run
-    mf = os.path.join(root, "t_verified.manifest.json")
+    mf = os.path.join(root, "t_skew_report.manifest.json")
     with open(mf) as f:
         before = json.load(f)["census"]
+    assert "salting_lost_pairs" in before
     os.remove(mf)
     images = gen_images(spark, N, 7)
     run = run_pipeline(spark, images, root, run_id="rr")
-    assert {r.name for r in run.results if not r.skipped} == {"t_verified"}
+    assert {r.name for r in run.results if not r.skipped} == {"t_skew_report"}
     with open(mf) as f:
         assert json.load(f)["census"] == before
 
@@ -100,7 +101,6 @@ def test_config_change_invalidates_checkpoints(spark, first_run):
 # manifest
 CENSUSES = {
     "t_skew_report": "salting_lost_pairs",
-    "t_verified": "verify_slack_skips",
     "t_containment": "containment_skipped_groups",
 }
 

@@ -98,3 +98,34 @@ def test_pixel_less_rows_have_no_phash_family(spark, golden_table):
     assert out.where(F.col("hamming_ph").isNotNull()).count() == 0
     # a row paired with itself still verifies (on its digest)
     assert out.where(F.col("a") == F.col("b")).where("verified").count() == 5
+
+
+def test_verify_jaccard_is_exact(spark, golden_table):
+    """verify_pairs reports the exact shingle-set Jaccard for EVERY pair,
+    checked against Python sets over consecutive-id golden captions. The
+    fixture must hold pairs that share shingles at a simhash distance above
+    24 bits (+5 sd at J = 0.8): a verify that skipped the shingle join
+    beyond such a slack would report 0.0 there and fail."""
+    from dedup_spark.operators.textdedup import text_signatures
+    from dedup_spark.operators.verify import verify_pairs
+
+    pdf, df = _valid_captions(spark, golden_table)
+    sigs = text_signatures(df, "image_id", "caption").localCheckpoint()
+    ids = sorted(pdf.image_id)
+    pairs = spark.createDataFrame(list(zip(ids, ids[1:])), "a string, b string")
+    got = verify_pairs(pairs, sigs).select("a", "b", "jaccard", "hamming_sim")
+    rows = got.collect()
+    assert len(rows) == len(ids) - 1
+
+    memo: dict = {}
+    sets = {
+        i: set(shingle_hashes(normalize_caption(c), CFG.shingle_k, memo).tolist())
+        for i, c in zip(pdf.image_id, pdf.caption)
+    }
+    far = 0
+    for r in rows:
+        sa, sb = sets[r.a], sets[r.b]
+        want = len(sa & sb) / len(sa | sb) if sa and sb else 0.0
+        assert r.jaccard == want, (r.a, r.b, r.jaccard, want)
+        far += r.hamming_sim > 24 and want > 0
+    assert far, "fixture must hold a sharing pair beyond a 24-bit simhash slack"
