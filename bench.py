@@ -59,7 +59,7 @@ def run_bench(cpus: int | None = None, sf_dir: str | None = None,
     sf_dir = sf_dir or os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     bench_n = bench_n or int(os.environ.get("SPARK_GRAFT_BENCH_N", "100000"))
 
-    from dedup_spark.session import get_spark
+    from dedup_spark.session import codegen_census, get_spark
     from dedup_spark.sources.gen_images import BENCH_SEED, gen_images
     from perfbench import procfs
 
@@ -94,7 +94,11 @@ def run_bench(cpus: int | None = None, sf_dir: str | None = None,
         # init — so min() partly measured warm-up spread, not the engine.
         # One UNTIMED tiny pipeline run exercises the exact same plans and
         # code paths first; both timed attempts then run in a warm JVM and
-        # the attempt spread reflects real run-to-run noise.
+        # the attempt spread reflects real run-to-run noise. The warm-up
+        # keeps those plans compiled only if the codegen cache holds them:
+        # Spark's default held 100 of the ~340 classes a pass generates, so
+        # every attempt recompiled them (session.CODEGEN_CACHE_ENTRIES);
+        # images_pipeline_codegen records what each attempt still compiled.
         warm_input = f"{root}/t_warm_input"
         gen_images(spark, 2048, BENCH_SEED + 1).write.mode(
             "overwrite"
@@ -114,15 +118,17 @@ def run_bench(cpus: int | None = None, sf_dir: str | None = None,
         # window can be told apart from slow code.
         host = {"calib_s": round(procfs.calibrate(), 4)}
         cpu0 = procfs.cpu_times()
-        attempts, ledgers = [], []
+        attempts, ledgers, codegen = [], [], []
         for i in range(2):
             run_root = f"{root}/run{i}"
+            cg0 = codegen_census(spark)
             t0 = time.perf_counter()
             run = run_pipeline(
                 spark, spark.read.parquet(input_path), run_root, run_id="bench"
             )
             spark.read.parquet(f"{run_root}/t_report").count()
             attempts.append(round(time.perf_counter() - t0, 3))
+            codegen.append(codegen_census(spark, since=cg0))
             ledgers.append([
                 {"name": r.name, "seconds": r.seconds, "rows": r.rows,
                  "skipped": r.skipped}
@@ -188,6 +194,10 @@ def run_bench(cpus: int | None = None, sf_dir: str | None = None,
         # are wall time under contention and do not sum to the attempt
         "images_pipeline_stages": ledgers[attempts.index(min(attempts))],
         "host": host,
+        # classes Janino compiled during each flagship attempt and their
+        # compile seconds, in run order: > 0 on a warm attempt means a plan
+        # stopped reusing the warm-up's generated code
+        "images_pipeline_codegen": codegen,
         # best-of-2 attempts for the multi-second registry queries
         "query_attempts": query_attempts,
     }

@@ -4,6 +4,12 @@ AQE stays on as a *backstop* (skew-join, partition coalescing); explicit skew
 handling lives in operators.skew per the north rule. Shuffle partitions are
 sized to the actual parallelism instead of the 200 default — at cluster scale
 the caller overrides via --conf, these are local-mode ergonomics.
+
+Generated code is compiled once per session, not once per pass: the
+whole-stage-codegen cache is sized to hold every distinct class the pipeline
+generates, and class names carry no codegen stage id, so identical stages
+share one compiled class. ``codegen_census`` reads Spark's own counters of
+what was compiled.
 """
 
 from __future__ import annotations
@@ -48,6 +54,15 @@ MALLOC_TUNING = {
     "MALLOC_TRIM_THRESHOLD_": "-1",
     "MALLOC_TOP_PAD_": "268435456",
 }
+
+
+# Codegen cache size. Distinct generated classes, measured with an unbounded
+# cache and useIdInClassName=false on a 4-core host: a cold 6k images_full
+# pass 263 (1.4 MB of bytecode), a 12k captions_text pass 123, both in one
+# session 329, and a whole bench.py session (100k flagship, its warm-up and
+# the eight headline queries) 469 in 2.4 MB. 1000 holds twice the largest;
+# full, it keeps ~5 MB of bytecode (~5 KB an entry) in a multi-GB driver.
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def _default_driver_memory() -> str:
@@ -98,6 +113,16 @@ def get_spark(
         # at 32 concurrent tasks G1 collapsed (a warm 2.8GB scan-count took
         # 14.5s at 32 cores vs 2.2s at 8). 256-row batches → ~1.7s at 32.
         .config("spark.sql.parquet.columnarReaderBatchSize", "256")
+        # Janino compiles each whole-stage-codegen class on a cache miss, on
+        # the planning path of every job and again in tasks. The default
+        # cache holds 100 classes and a 6k images_full pass generates ~345,
+        # so every warm pass recompiled all of them (4-7 of its 20-25 JVM
+        # CPU-s). A static conf: it only takes effect in the builder.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # the generated class name embeds its codegen stage id, so the same
+        # code in another stage, another plan or an AQE re-plan missed the
+        # cache; without the id a cold 6k pass compiles 263 classes, not ~350
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     # shuffle files default to /tmp — a REAL shared disk on this host, a
     # serial bottleneck no multi-executor cluster has (executors get local
@@ -135,6 +160,26 @@ def get_spark(
     spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def codegen_census(spark: SparkSession, since: dict | None = None) -> dict:
+    """Classes Janino compiled in this JVM so far, and their compile seconds.
+
+    Both are Spark's own JVM-wide counters, which only a codegen-cache miss
+    moves, so a pass that reuses every class adds 0: the count of
+    ``CodegenMetrics``' compilation-time histogram, and the summed
+    ``CodeGenerator.compileTime`` (the histogram's snapshot is a decaying
+    sample, whose mean times count read 0.02 s for 75 compiles). With
+    ``since`` (an earlier census) both are the difference.
+    """
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    generator = spark._jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    classes = metrics.METRIC_COMPILATION_TIME().getCount()
+    ns = generator.compileTime()
+    out = {"classes": classes, "compile_s": round(ns / 1e9, 3)}
+    if since:
+        out = {k: round(v - since[k], 3) for k, v in out.items()}
+    return out
 
 
 def py_parallelism(spark: SparkSession) -> int:

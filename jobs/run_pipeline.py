@@ -71,12 +71,13 @@ def main(argv: list[str] | None = None) -> int:
                         "the current input are dropped (deletes)")
     args = p.parse_args(argv)
 
-    from dedup_spark.session import get_spark
+    from dedup_spark.session import codegen_census, get_spark
     from dedup_spark.plans.pipeline import run_pipeline
 
     spark = get_spark(app="dedup_pipeline", master=args.master,
                       shuffle_partitions=args.shuffle_partitions)
     t0 = time.perf_counter()
+    codegen0 = codegen_census(spark)
 
     if args.generate:
         from dedup_spark.sources.gen_images import gen_images
@@ -114,10 +115,14 @@ def main(argv: list[str] | None = None) -> int:
     )
 
     elapsed = time.perf_counter() - t0
+    codegen = codegen_census(spark, since=codegen0)
     summary = {
         "store_root": args.store_root,
         "run_id": run.store.run_id,
         "elapsed_sec": round(elapsed, 2),
+        # whole-stage-codegen classes compiled in the elapsed window
+        "codegen_classes": codegen["classes"],
+        "codegen_compile_s": codegen["compile_s"],
         "stages": [
             {"stage": r.name, "rows": r.rows, "skipped": r.skipped,
              "sec": r.seconds}
