@@ -1,51 +1,56 @@
-"""Connected components (SURVEY.md §2 B34): size-gated hybrid.
+"""Connected components (SURVEY.md §2 B34): two paths, chosen by edge count.
 
 Dedup edge sets are tiny relative to the corpus — verification keeps
 O(true duplicates) edges, not O(candidates) — so the common case (even at
 10^12 input rows, if dup density is sane) is an edge table far below worker
-memory. The hybrid:
+memory. The two paths:
 
-- ``edge count ≤ small_threshold`` (r4): the r2 layout — ship the string
-  pairs straight into ONE task's numpy union-find, label directly. The r3
-  int64-coding machinery below costs ~4-5s of fixed overhead (two
-  localCheckpoints, a collision-check aggregate, three relabel shuffles)
-  that dominates at tiny edge counts (BENCH r3: docs_near_dup_clusters
-  5.9→7.0s); below ~100k edges the strings are at most a few MB and
-  np.unique over them is sub-second, so none of that machinery pays.
-- ``edge count ≤ local_threshold``: ONE executor task runs a vectorized
-  numpy union-find over the whole edge set (mapInPandas on a single
-  partition — executor-side, memory-bounded by the threshold knob, NOT a
-  driver collect). Replaces the r1 per-round driver loop whose ~6 barrier
-  jobs made t_clusters the least-scalable stage in BENCH r1 (ratio 0.79 of
-  ideal 4.0 — it got *slower* with more cores). r3: the task runs over
-  xxhash64 int64 endpoint codes, never strings, and min-id relabeling is
-  distributed — see ``_local_cc``. On the astronomically rare id-hash
-  collision this path now FALLS BACK to the iterative path automatically
-  (r4; ADVICE r3 — the pipeline caller exposes no local_threshold knob, so
-  raising was an instruction the user couldn't follow).
-- above the threshold: DataFrame-iterative large-star/small-star (Kiveris
-  et al., "Connected Components in MapReduce and Beyond", SoCC'14 — the
-  standard O(log n)-round algorithm needing only groupBy/join per round).
-  This is the 100-TB path for graphs whose edges don't fit one worker;
-  rounds converge on an order-insensitive (count, xor-of-hashes)
-  fingerprint, one aggregate per round, with ``localCheckpoint`` truncating
-  lineage (without it the plan doubles per iteration).
+- ``edge count ≤ local_threshold``: ONE executor task (mapInArrow on a
+  single partition — executor-side, memory-bounded by the gate, NOT a
+  driver collect) codes the endpoint strings in Arrow's C++ kernels and runs
+  a vectorized numpy union-find over the codes; see ``_label_batches``. The
+  codes are the ranks of the sorted distinct ids, so they are dense, equal
+  codes mean equal strings (no hashing, hence no collision to check for),
+  and code order is id order: the min root of a component IS its min
+  image_id, and roots map back to strings with one ``take``. Replaces the
+  r1 per-round driver loop whose ~6 barrier jobs made t_clusters the
+  least-scalable stage in BENCH r1.
+- above the gate: DataFrame-iterative large-star/small-star (Kiveris et al.,
+  "Connected Components in MapReduce and Beyond", SoCC'14 — the standard
+  O(log n)-round algorithm needing only groupBy/join per round). This is
+  the path for edge sets that do not fit in one worker; rounds converge on
+  an order-insensitive (count, xor-of-hashes) fingerprint, one aggregate
+  per round, with ``localCheckpoint`` truncating lineage (without it the
+  plan doubles per iteration).
 
-Node ids are the string image_ids; ordering is lexicographic, cluster id =
-component minimum. Both paths produce identical assignments (property-tested
-against networkx in tests/test_cc.py).
+Node ids are the string image_ids; ordering is by UTF-8 bytes (Arrow's and
+Spark's string order alike), cluster id = component minimum. Both paths
+produce identical assignments (property-tested against networkx in
+tests/test_cc.py).
 """
 
 from __future__ import annotations
 
-import logging
+from typing import Iterable, Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-log = logging.getLogger(__name__)
+# The in-task path's memory gate, in distinct edges. Worker peak RSS of the
+# task body with generator-shaped ~27-byte ids, input in 4096-row batches:
+# ~200 B per edge (209 MB at 1M, 751 MB at 4M, 2,496 MB at 13M), mostly the
+# input strings plus Arrow's hash table while it builds the dictionary. The
+# xxhash64-coded task it replaced peaked at 2,578 MB for its 20M-edge gate
+# (135 B per edge), so 13M keeps the worker's peak no higher. Longer ids
+# cost more per edge.
+LOCAL_EDGES = 13_000_000
+
+# rows per output batch of the in-task path: bounds each string column of a
+# batch far below Arrow's 2 GiB int32 offsets
+_OUT_ROWS = 1 << 16
 
 
 def _sym(edges: DataFrame) -> DataFrame:
@@ -86,20 +91,14 @@ def _fingerprint(edges: DataFrame) -> tuple:
     return (row["n"], row["h"])
 
 
-def _numpy_components(
-    a: np.ndarray, b: np.ndarray, cols: tuple[str, str] = ("image_id", "cluster_id")
-) -> pd.DataFrame:
-    """Vectorized union-find over edges → (node, min-root), self rows dropped.
+def _numpy_components(ca: np.ndarray, cb: np.ndarray, n: int) -> np.ndarray:
+    """Vectorized union-find over edges of dense codes ``0..n-1`` → the
+    root of every code, which is the minimum code of its component.
 
     O(E) per round, O(log n) rounds (pointer-jumping + per-edge min-root
-    linking via np.minimum.at); no python-level per-edge loop. The min
-    ROOT per component is by np.unique order — lexicographic for strings,
-    numeric for int codes (callers relying on min-id semantics must pass
-    an order-preserving coding or relabel afterwards).
+    linking via np.minimum.at); no python-level per-edge loop.
     """
-    ids, codes = np.unique(np.concatenate([a, b]), return_inverse=True)
-    ca, cb = codes[: len(a)], codes[len(a):]
-    parent = np.arange(len(ids), dtype=np.int64)
+    parent = np.arange(n, dtype=ca.dtype)
     for _ in range(64):
         # full path compression
         while True:
@@ -113,133 +112,65 @@ def _numpy_components(
         if not live.any():
             break
         np.minimum.at(parent, hi[live], lo[live])
-    labeled = pd.DataFrame({cols[0]: ids, cols[1]: ids[parent[parent]]})
-    return labeled[labeled[cols[0]] != labeled[cols[1]]]
+    return parent[parent]
 
 
-def _local_cc_small(edges: DataFrame) -> DataFrame:
-    """Tiny-graph path: string endpoints straight into one task's union-find.
+def _label_batches(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """mapInArrow body: edge batches (a, b) → (image_id, cluster_id) rows for
+    every non-root node, cluster_id = the component's min image_id.
 
-    No int64 coding, no collision check, no relabel shuffles — at ≤ ~100k
-    edges the whole edge set is a few MB and np.unique over object dtype is
-    sub-second, so the r3 machinery's ~4-5s fixed overhead is pure loss here
-    (the measured docs_near_dup_clusters regression, VERDICT r3 "What's
-    wrong" #1). np.unique's lexicographic order makes the component root the
-    min image_id directly.
+    The endpoints stay chunked as they arrive; ``large_string`` keeps the
+    distinct-id dictionary valid past 2 GiB of id bytes. Dictionary encoding
+    gives each distinct id an index, and the rank of that id in the sorted
+    dictionary replaces the index, so codes are dense and in id order.
     """
-
-    def run(batches):
-        frames = [pdf for pdf in batches if len(pdf)]
-        if not frames:
-            return
-            yield  # pragma: no cover — make `run` a generator
-        df = pd.concat(frames, ignore_index=True)
-        yield _numpy_components(df["a"].to_numpy(), df["b"].to_numpy())
-
-    return edges.select("a", "b").repartition(1).mapInPandas(
-        run, schema="image_id string, cluster_id string"
-    )
-
-
-def _ids_collide(ends: DataFrame) -> bool:
-    """True iff two distinct image_ids share an xxhash64 code (p ≈ n²/2⁶⁵)."""
-    chk = ends.agg(
-        F.countDistinct("image_id").alias("n_ids"),
-        F.countDistinct("code").alias("n_codes"),
-    ).first()
-    return chk["n_ids"] != chk["n_codes"]
-
-
-def _local_cc(edges: DataFrame) -> DataFrame | None:
-    """Whole-graph union-find in one executor task (small/medium graphs).
-
-    r3 revision (VERDICT r2 #3 — the last serial term): the single task no
-    longer touches the string ids at all. Shipping ~20M string pairs to one
-    worker and np.unique-ing 40M OBJECT-dtype values (Python-level compares)
-    was what made t_clusters a flat ~68s at n=3.2M regardless of cores.
-    Now:
-
-    1. endpoints are int64-coded JVM-side (``xxhash64``) — the single task
-       receives 16-byte int pairs (~20× smaller) and its np.unique runs in
-       C over int64;
-    2. the task emits (code, root_code) for non-root endpoints only;
-    3. min-image_id relabeling happens DISTRIBUTED: endpoint→code table
-       joins the root map, groupBy root takes min(image_id), join back —
-       three thin shuffles that scale with cores instead of one giant
-       serial string sort.
-
-    Hash-collision safety: two distinct ids mapping to one code would merge
-    two clusters silently, so the endpoint table's (distinct ids, distinct
-    codes) counts are compared — one cheap aggregate; on the astronomically
-    rare mismatch (p ≈ n²/2⁶⁵) this returns None and the caller falls back
-    to the iterative path, which never codes ids (r4: automatic — the
-    pipeline caller doesn't expose local_threshold, so the r3 RuntimeError
-    was an instruction a pipeline user couldn't follow). At 10^10+ nodes
-    64-bit coding stops being collision-safe — but that regime exceeds
-    ``local_threshold`` and runs the iterative path anyway.
-    """
-    coded = edges.select(
-        "a", "b", F.xxhash64("a").alias("ca"), F.xxhash64("b").alias("cb")
-    ).localCheckpoint()  # consumed twice: endpoint table + union-find input
-    ends = (
-        coded.select(F.col("a").alias("image_id"), F.col("ca").alias("code"))
-        .union(coded.select(F.col("b").alias("image_id"), F.col("cb").alias("code")))
-        .dropDuplicates(["image_id"])
-        .localCheckpoint()  # consumed twice: collision check + join
-    )
-    if _ids_collide(ends):
-        log.warning(
-            "xxhash64 collision across node ids — falling back to the "
-            "id-preserving iterative connected-components path"
+    a, b = [], []
+    for batch in batches:
+        a.append(batch.column(0))
+        b.append(batch.column(1))
+    n_edges = sum(len(c) for c in a)
+    if not n_edges:
+        return
+    enc = pa.chunked_array(a + b).cast(pa.large_string()).dictionary_encode()
+    del a, b  # each input is dropped once coded: the peak is the encode step
+    ids = enc.chunk(0).dictionary
+    order = pc.sort_indices(ids).to_numpy()
+    rank = np.empty(len(ids), dtype=np.int32)
+    rank[order] = np.arange(len(ids), dtype=np.int32)
+    codes = rank[np.concatenate([c.indices.to_numpy() for c in enc.chunks])]
+    del enc, rank
+    roots = _numpy_components(codes[:n_edges], codes[n_edges:], len(ids))
+    del codes
+    members = np.flatnonzero(roots != np.arange(len(roots)))
+    for lo in range(0, len(members), _OUT_ROWS):
+        m = members[lo : lo + _OUT_ROWS]
+        yield pa.RecordBatch.from_arrays(
+            [
+                ids.take(order[m]).cast(pa.string()),
+                ids.take(order[roots[m]]).cast(pa.string()),
+            ],
+            names=["image_id", "cluster_id"],
         )
-        return None
-
-    def run(batches):
-        frames = [pdf for pdf in batches if len(pdf)]
-        if not frames:
-            return
-            yield  # pragma: no cover — make `run` a generator
-        df = pd.concat(frames, ignore_index=True)
-        yield _numpy_components(
-            df["ca"].to_numpy(), df["cb"].to_numpy(), cols=("code", "root")
-        )
-
-    roots = coded.select("ca", "cb").repartition(1).mapInPandas(
-        run, schema="code long, root long"
-    )
-    members = ends.join(roots, "code", "left").withColumn(
-        "root", F.coalesce("root", F.col("code"))
-    )
-    cmin = members.groupBy("root").agg(F.min("image_id").alias("cluster_id"))
-    return (
-        members.join(cmin, "root")
-        .select("image_id", "cluster_id")
-        .where(F.col("image_id") != F.col("cluster_id"))
-    )
 
 
 def connected_components(
     edges: DataFrame,
     nodes: DataFrame,
     max_iter: int = 25,
-    local_threshold: int = 20_000_000,
-    small_threshold: int = 100_000,
+    local_threshold: int = LOCAL_EDGES,
 ) -> DataFrame:
     """edges(a, b) + nodes(image_id) → clusters(image_id, cluster_id).
 
     Every node appears exactly once; isolated nodes are their own cluster.
-    Three tiers by edge count:
+    Two paths by distinct edge count:
 
-    - ≤ ``small_threshold``: strings straight through one task's union-find
-      (the coding/relabel overhead of the next tier is pure loss here);
-    - ≤ ``local_threshold``: int64-coded single-task union-find with
-      distributed min-id relabel — at the default, ~20M coded edges is
-      ≈ 320 MB resident in one task, comfortable for any real executor
-      profile (size down only for very small executors). Falls back to the
-      next tier automatically on an id-hash collision;
-    - above: iterative star-contraction — the path for edge sets that
-      genuinely exceed worker memory, and for node counts where 64-bit id
-      coding stops being collision-safe.
+    - ≤ ``local_threshold``: one task codes the ids by their rank in the
+      sorted distinct-id set and runs a numpy union-find on the codes.
+      Codes come from exact string equality, not a hash, so two ids never
+      share one and no collision check or fallback is needed; code order
+      is id order, so the root is the min image_id with no relabel.
+    - above: iterative star-contraction — the path for edge sets that do
+      not fit in one worker.
     """
     cur = (
         edges.select(
@@ -249,13 +180,11 @@ def connected_components(
         .distinct()
         .localCheckpoint()
     )
-    n_edges = cur.count()
-    labeled = None
-    if n_edges <= small_threshold:
-        labeled = _local_cc_small(cur)
-    elif n_edges <= local_threshold:
-        labeled = _local_cc(cur)  # None on id-hash collision → iterative
-    if labeled is None:
+    if cur.count() <= local_threshold:
+        labeled = cur.repartition(1).mapInArrow(
+            _label_batches, schema="image_id string, cluster_id string"
+        )
+    else:
         prev_fp = None
         for _ in range(max_iter):
             cur = _small_star(_large_star(_sym(cur))).localCheckpoint()

@@ -1,6 +1,7 @@
 import networkx as nx
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 
 from dedup_spark.operators.cc import connected_components
@@ -50,58 +51,75 @@ def test_cc_chain_and_star(spark):
     assert got["lonely"] == "lonely"
 
 
-@pytest.mark.parametrize(
-    "small_threshold,local_threshold",
-    [
-        (1_000_000, 1_000_000),  # tiny-graph string path (r4 default here)
-        (0, 1_000_000),          # int64-coded single-task + distributed relabel
-        (0, 0),                  # iterative large-star/small-star
-    ],
-)
-def test_cc_paths_agree(spark, small_threshold, local_threshold):
-    """All three tiers (string union-find, coded union-find, iterative
+# mixed case, non-ASCII and shared prefixes: the min id is by UTF-8 bytes
+# ("Z" < "a" < "a/b" < "n000" < "é"), the order of Spark's min and of the
+# DuckDB twin of docs_cc_labels
+ODD_IDS = ["a", "a/b", "Z", "é", "img/É", "img/e", "img/e/1"]
+
+
+def _utf8_min(ids):
+    return min(ids, key=str.encode)
+
+
+@pytest.mark.parametrize("local_threshold", [1_000_000, 0])
+def test_cc_paths_agree(spark, local_threshold):
+    """Both paths (in-task Arrow-coded union-find, iterative
     star-contraction) produce identical assignments."""
     rng = np.random.default_rng(9)
-    n = 120
-    nodes = [f"n{i:03d}" for i in range(n)]
+    nodes = [f"n{i:03d}" for i in range(120)] + ODD_IDS
     edges = []
-    for _ in range(150):
-        i, j = rng.integers(0, n, size=2)
+    for _ in range(160):
+        i, j = rng.integers(0, len(nodes), size=2)
         if i != j:
             edges.append((nodes[min(i, j)], nodes[max(i, j)]))
+    # every odd id joins one component, so its root must be "Z"
+    edges += list(zip(ODD_IDS, ODD_IDS[1:]))
     e_df = spark.createDataFrame(pd.DataFrame(edges, columns=["a", "b"]))
     n_df = spark.createDataFrame(pd.DataFrame({"image_id": nodes}))
     out = connected_components(
-        e_df, n_df,
-        local_threshold=local_threshold, small_threshold=small_threshold,
+        e_df, n_df, local_threshold=local_threshold
     ).toPandas()
     got = dict(zip(out.image_id, out.cluster_id))
     g = nx.Graph()
     g.add_nodes_from(nodes)
     g.add_edges_from(edges)
-    exp = {x: min(c) for c in nx.connected_components(g) for x in c}
+    exp = {x: _utf8_min(c) for c in nx.connected_components(g) for x in c}
     assert got == exp
+    assert got["é"] == "Z"
 
 
-def test_cc_collision_falls_back_to_iterative(spark, monkeypatch):
-    """An id-hash collision in the coded path must not raise: the caller
-    falls back to the id-preserving iterative path automatically (ADVICE r3
-    — pipeline users cannot reach the local_threshold knob)."""
-    from dedup_spark.operators import cc as cc_mod
+def test_label_batches_multi_chunk_and_empty():
+    """The in-task path without Spark: edges spread over several Arrow
+    batches (one of them empty) share one code space; no batches, or only
+    empty ones, yield nothing."""
+    from dedup_spark.operators.cc import _label_batches
 
-    monkeypatch.setattr(cc_mod, "_ids_collide", lambda ends: True)
-    nodes = [f"m{i}" for i in range(6)]
-    edges = [("m0", "m1"), ("m1", "m2"), ("m4", "m5")]
-    e_df = spark.createDataFrame(pd.DataFrame(edges, columns=["a", "b"]))
-    n_df = spark.createDataFrame(pd.DataFrame({"image_id": nodes}))
-    out = connected_components(
-        e_df, n_df, small_threshold=0, local_threshold=1_000_000
-    ).toPandas()
-    got = dict(zip(out.image_id, out.cluster_id))
-    assert got == {
-        "m0": "m0", "m1": "m0", "m2": "m0",
-        "m3": "m3", "m4": "m4", "m5": "m4",
-    }
+    def batch(pairs):
+        a, b = zip(*pairs) if pairs else ((), ())
+        return pa.RecordBatch.from_arrays(
+            [pa.array(a, pa.string()), pa.array(b, pa.string())], names=["a", "b"]
+        )
+
+    rng = np.random.default_rng(4)
+    nodes = [f"x{i:03d}" for i in range(80)] + ODD_IDS
+    edges = [
+        (nodes[i], nodes[j])
+        for i, j in rng.integers(0, len(nodes), size=(90, 2))
+        if i != j
+    ]
+    batches = [batch(edges[k : k + 7]) for k in range(0, len(edges), 7)]
+    batches.insert(3, batch([]))
+    out = pa.Table.from_batches(list(_label_batches(iter(batches)))).to_pydict()
+    got = dict(zip(out["image_id"], out["cluster_id"]))
+    g = nx.Graph()
+    g.add_edges_from(edges)
+    exp = {}
+    for comp in nx.connected_components(g):
+        root = _utf8_min(comp)
+        exp.update({x: root for x in comp if x != root})
+    assert got == exp
+    assert list(_label_batches(iter([]))) == []
+    assert list(_label_batches(iter([batch([])]))) == []
 
 
 def test_numpy_components_random_graphs():
@@ -111,21 +129,13 @@ def test_numpy_components_random_graphs():
     for _ in range(25):
         n = int(rng.integers(2, 200))
         m = int(rng.integers(1, 400))
-        a = rng.integers(0, n, size=m)
-        b = rng.integers(0, n, size=m)
-        keep = a != b
-        a, b = a[keep], b[keep]
-        if not len(a):
-            continue
-        ids = np.array([f"x{v:04d}" for v in range(n)])
-        out = _numpy_components(ids[a], ids[b])
-        got = dict(zip(out.image_id, out.cluster_id))
+        a = rng.integers(0, n, size=m).astype(np.int32)
+        b = rng.integers(0, n, size=m).astype(np.int32)
+        roots = _numpy_components(a, b, n)
         g = nx.Graph()
-        g.add_edges_from(zip(ids[a], ids[b]))
-        exp = {}
+        g.add_nodes_from(range(n))
+        g.add_edges_from(zip(a.tolist(), b.tolist()))
+        exp = np.empty(n, dtype=np.int64)
         for comp in nx.connected_components(g):
-            root = min(comp)
-            for x in comp:
-                if x != root:
-                    exp[x] = root
-        assert got == exp
+            exp[list(comp)] = min(comp)
+        assert np.array_equal(roots, exp)
