@@ -109,7 +109,11 @@ def to_signed64(u: np.ndarray) -> np.ndarray:
     return u.astype(np.uint64, copy=False).view(np.int64)
 
 
+_POP8 = np.array([bin(b).count("1") for b in range(256)], dtype=np.uint8)
+
+
 def popcount64(x: np.ndarray) -> np.ndarray:
-    """Per-element popcount of a uint64/int64 array (numpy<2 lacks bit_count)."""
+    """Per-element popcount of a uint64/int64 array: one table lookup per
+    byte (numpy<2 lacks bit_count)."""
     v = np.ascontiguousarray(x).view(np.uint8)
-    return np.unpackbits(v).reshape(x.shape + (8 * x.dtype.itemsize,)).sum(axis=-1)
+    return _POP8[v].reshape(x.shape + (x.dtype.itemsize,)).sum(axis=-1)

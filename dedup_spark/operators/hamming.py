@@ -12,11 +12,17 @@ star-candidates + join-verify + orphan-rescue this
 - is EXACT within a bucket (no representative weak-link loss at all — the
   failure mode that forced the rescue pass for these families);
 - emits O(true matches) rows instead of O(bucket membership) candidates;
-- costs Σ m² popcounts per band with m bounded by the salting: Hamming
-  families salt with UNBOUNDED fanout = ceil(size/cap) (operators.skew), so
-  sub-buckets stay ≈ cap regardless of how hot the bucket is — worker
-  memory for the match matrix is O(cap²), a few KB. A sub-bucket above
-  ``_MATRIX_MAX`` members means that salting invariant broke, and raises.
+- costs Σ m(m-1)/2 pair tests per band with m bounded by the salting:
+  Hamming families salt with UNBOUNDED fanout = ceil(size/cap)
+  (operators.skew), so sub-buckets stay ≈ cap regardless of how hot the
+  bucket is. A sub-bucket above ``_SUBBUCKET_MAX`` members means that
+  salting invariant broke, and raises.
+
+One kernel (``_root_edges``) handles a whole batch of sub-buckets at once:
+every in-sub-bucket pair is listed by segment arithmetic, all pairs get one
+table popcount, and one min-label propagation runs over the matched pairs
+of all sub-buckets. Most sub-buckets are random 2-member collisions, so a
+Python call per sub-bucket would cost more than its popcounts.
 
 Residual recall trade-off: a true pair inside a HOT bucket whose two rows
 land in different salt sub-buckets loses that bucket; recovery relies on the
@@ -46,6 +52,7 @@ from pyspark.sql.types import (
 )
 
 from dedup_spark.config import DEFAULT_CONFIG, PipelineConfig
+from dedup_spark.functions.hashing import popcount64
 from dedup_spark.session import map_in_groups
 
 _KEY = ["family", "band_idx", "band_key", "salt"]
@@ -59,137 +66,94 @@ PAIRS_SCHEMA = StructType(
     ]
 )
 
-_POP = np.unpackbits(np.arange(256, dtype=np.uint8)[:, None], axis=1).sum(
-    axis=1
-).astype(np.uint16)
-
-# the m×m match matrix is O(m²) worker memory; Hamming salting keeps
-# sub-buckets near bucket_cap (64), 32× under this
-_MATRIX_MAX = 2048
+# bounds a batch's pair list, Σ m(m-1)/2 over its sub-buckets; Hamming
+# salting keeps sub-buckets near bucket_cap (64), 32× under this
+_SUBBUCKET_MAX = 2048
 
 
-def _labels_matrix(hv: np.ndarray, thr: int) -> np.ndarray | None:
-    """Exact component labels via a materialized m×m match matrix."""
-    m = len(hv)
-    M = np.zeros((m, m), dtype=bool)
-    step = max(1, (1 << 20) // m)
-    for lo in range(0, m, step):
-        hi = min(lo + step, m)
-        x = hv[lo:hi, None] ^ hv[None, :]
-        bytes_ = x.view(np.uint8).reshape(hi - lo, m, 8)
-        d = _POP[bytes_].sum(axis=2)
-        M[lo:hi] = d <= thr
-    np.fill_diagonal(M, False)
-    if not M.any():
-        return None
-    labels = np.arange(m)
-    big = np.int64(m)
-    for _ in range(64):  # converges in <= graph diameter rounds
-        nbr = np.where(M, labels[None, :], big).min(axis=1)
-        new = np.minimum(labels, nbr)
-        new = np.minimum(new, new[new])  # pointer-jump
-        if np.array_equal(new, labels):
-            break
-        labels = new
-    return labels
+def _root_edges(pdf: pd.DataFrame, thresholds: dict[str, int]) -> pd.DataFrame:
+    """Batch of salted rows, sorted on ``_KEY`` → one (root, member, family,
+    hamming) row per non-root member of each sub-bucket's threshold graph.
 
-
-def _bucket_edges(ids: np.ndarray, hv: np.ndarray, thr: int,
-                  out: dict, family: str) -> None:
-    """Emit one edge per non-root member to its component root in the
-    bucket's threshold graph.
-
-    In-bucket connected components by vectorized min-label propagation;
-    each non-root member emits one edge to its component root. A dense true
-    cluster of m members costs m-1 emitted rows instead of ~m²/2 — the
-    downstream global CC only needs connectivity, and the transitive
-    closure it takes is identical. (A root edge may itself exceed thr —
-    see module docstring.)
+    The root is the smallest ``image_id`` of the member's component within
+    its sub-bucket. A dense true cluster of m members costs m-1 rows
+    instead of ~m²/2 — the downstream global CC only needs connectivity,
+    and the transitive closure it takes is identical. (One image appears at
+    most once per sub-bucket by construction.)
     """
-    m = len(ids)
-    if m < 2:
-        return
-    if m == 2:  # fast path: the overwhelmingly common random collision
-        d = int(np.uint64(hv[0]) ^ np.uint64(hv[1])).bit_count()
-        if d <= thr:
-            a, b = (ids[0], ids[1]) if ids[0] < ids[1] else (ids[1], ids[0])
-            out["a"].append(a)
-            out["b"].append(b)
-            out["family"].append(family)
-            out["hamming"].append(d)
-        return
-    if m > _MATRIX_MAX:
+    n = len(pdf)
+    fam = pdf["family"].to_numpy()
+    newg = np.arange(n) == 0
+    for k in _KEY:
+        col = pdf[k].to_numpy()
+        newg[1:] |= col[1:] != col[:-1]
+    starts = np.flatnonzero(newg)
+    sizes = np.diff(np.r_[starts, n])
+    if n and sizes.max() > _SUBBUCKET_MAX:
+        big = starts[sizes.argmax()]
         raise ValueError(
-            f"{family} sub-bucket of {m} members exceeds {_MATRIX_MAX}: "
-            "Hamming salting (operators.skew) must keep sub-buckets near "
-            "bucket_cap"
+            f"{fam[big]} sub-bucket of {sizes.max()} members exceeds "
+            f"{_SUBBUCKET_MAX}: Hamming salting (operators.skew) must keep "
+            "sub-buckets near bucket_cap"
         )
-    order = np.argsort(ids)          # lexicographic root = deterministic
-    ids = ids[order]
-    hv = hv[order].astype(np.uint64)
-    labels = _labels_matrix(hv, thr)
-    if labels is None:
-        return
-    members = np.nonzero(labels != np.arange(m))[0]
-    for i in members:
-        r = int(labels[i])
-        x = int(np.uint64(hv[r]) ^ np.uint64(hv[i]))
-        d = bin(x).count("1")
-        out["a"].append(ids[r])
-        out["b"].append(ids[i])
-        out["family"].append(family)
-        out["hamming"].append(d)
+    # rows by (sub-bucket, image_id): a sub-bucket's smallest id comes first
+    order = np.lexsort(
+        (pdf["image_id"].to_numpy().astype(str), np.cumsum(newg))
+    )
+    ids = pdf["image_id"].to_numpy()[order]
+    hv = pdf["hval"].to_numpy().astype(np.uint64)[order]
+    fam = fam[order]
+
+    # every pair i < j inside a sub-bucket: the row of rank r in a sub-bucket
+    # of m pairs with the m-1-r rows after it
+    later = np.repeat(starts + sizes, sizes) - 1 - np.arange(n)
+    i = np.repeat(np.arange(n), later)
+    j = i + 1 + np.arange(len(i)) - np.repeat(np.cumsum(later) - later, later)
+    thr = pd.Series(fam).map(thresholds).to_numpy()
+    hit = popcount64(hv[i] ^ hv[j]) <= thr[i]
+    i, j = i[hit], j[hit]
+
+    # min-label propagation: hook each matched pair's larger root onto the
+    # smaller, pointer-jump to roots, repeat until every pair shares one
+    lab = np.arange(n)
+    while True:
+        lo = np.minimum(lab[i], lab[j])
+        new = lab.copy()
+        np.minimum.at(new, lab[i], lo)
+        np.minimum.at(new, lab[j], lo)
+        while not np.array_equal(new[new], new):
+            new = new[new]
+        if np.array_equal(new, lab):
+            break
+        lab = new
+    b = np.flatnonzero(lab != np.arange(n))
+    r = lab[b]
+    return pd.DataFrame({
+        "a": ids[r],
+        "b": ids[b],
+        "family": fam[b],
+        "hamming": popcount64(hv[r] ^ hv[b]).astype(np.int32),
+    })
 
 
 def hamming_family_pairs(
-    salted_bands: DataFrame,
-    thresholds: dict[str, int] | None = None,
-    cfg: PipelineConfig = DEFAULT_CONFIG,
+    salted_bands: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG
 ) -> DataFrame:
     """salted band rows (hamming families) → verified (a, b, family, hamming).
 
     Distinct over (a, b): a pair passing in several bands/families reports
     its smallest distance once.
     """
-    if thresholds is None:
-        thresholds = {
-            "simhash": cfg.simhash_hamming_max,
-            "phash": cfg.phash_hamming_max,
-        }
-    fams = sorted(thresholds)
-    src = salted_bands.where(F.col("family").isin(fams)).select(
+    thresholds = {
+        "simhash": cfg.simhash_hamming_max,
+        "phash": cfg.phash_hamming_max,
+    }
+    src = salted_bands.where(F.col("family").isin(sorted(thresholds))).select(
         *_KEY, "image_id", "hval"
     )
-
-    def emit(pdf: pd.DataFrame) -> pd.DataFrame:
-        # Millions of buckets are singletons or random 2-collisions; a pandas
-        # groupby would pay frame-construction per bucket. The batch arrives
-        # sorted on the bucket key, so detect runs vectorized and slice.
-        # (One image appears at most once per bucket by construction.)
-        out = {"a": [], "b": [], "family": [], "hamming": []}
-        n = len(pdf)
-        fam = pdf["family"].to_numpy()
-        bi = pdf["band_idx"].to_numpy()
-        bk = pdf["band_key"].to_numpy()
-        st = pdf["salt"].to_numpy()
-        newg = np.ones(n, dtype=bool)
-        newg[1:] = (
-            (fam[1:] != fam[:-1]) | (bi[1:] != bi[:-1])
-            | (bk[1:] != bk[:-1]) | (st[1:] != st[:-1])
-        )
-        starts = np.nonzero(newg)[0]
-        ends = np.r_[starts[1:], n]
-        ids_all = pdf["image_id"].to_numpy()
-        hv_all = pdf["hval"].to_numpy().astype(np.uint64)
-        for s, e in zip(starts, ends):
-            if e - s < 2:
-                continue
-            _bucket_edges(
-                ids_all[s:e], hv_all[s:e], thresholds[fam[s]], out, fam[s]
-            )
-        return pd.DataFrame(out)
-
-    pairs = map_in_groups(src, _KEY, emit, PAIRS_SCHEMA)
+    pairs = map_in_groups(
+        src, _KEY, lambda pdf: _root_edges(pdf, thresholds), PAIRS_SCHEMA
+    )
     return (
         pairs.groupBy("a", "b")
         .agg(

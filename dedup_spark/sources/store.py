@@ -178,20 +178,27 @@ class ParquetStore:
 
     def _spark_metrics(self, name: str, out: DataFrame) -> int:
         """One Spark aggregate over the committed table — works on any
-        filesystem (the fallback for non-local roots and Iceberg)."""
+        filesystem (the fallback for non-local roots and Iceberg). Like the
+        footer path it overwrites one entry per (stage, run_id), so a
+        recommitted stage does not count its rows twice."""
         m = (
             out.groupBy(F.spark_partition_id().alias("partition_id"))
             .agg(F.count("*").alias("rows_out"))
             .withColumn("stage", F.lit(name))
             .withColumn("run_id", F.lit(self.run_id))
         ).cache()
-        m.write.mode("append").parquet(os.path.join(self.root, "t_metrics"))
+        m.write.mode("overwrite").parquet(
+            os.path.join(self.root, "t_metrics", f"{name}-{self.run_id}")
+        )
         total = m.agg(F.sum("rows_out")).collect()[0][0] or 0
         m.unpersist()
         return int(total)
 
     def metrics(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(os.path.join(self.root, "t_metrics"))
+        # footer files and Spark-written directories side by side
+        return spark.read.option("recursiveFileLookup", "true").parquet(
+            os.path.join(self.root, "t_metrics")
+        )
 
 
 class IcebergStore(ParquetStore):

@@ -1,6 +1,7 @@
-"""In-bucket exact Hamming verification (operators.hamming): root-edge
-connectivity equals the threshold graph's components; Spark path matches a
-brute-force oracle on random buckets."""
+"""In-bucket exact Hamming verification (operators.hamming): the batch
+kernel's root edges equal each sub-bucket's threshold-graph components,
+rooted at their smallest id; Spark path matches a brute-force oracle on
+random buckets."""
 
 import numpy as np
 import pandas as pd
@@ -9,7 +10,12 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from dedup_spark.operators.hamming import _bucket_edges, hamming_family_pairs
+from dedup_spark.operators.hamming import (
+    _KEY,
+    _SUBBUCKET_MAX,
+    _root_edges,
+    hamming_family_pairs,
+)
 
 
 def _brute_components(hv, thr):
@@ -22,32 +28,53 @@ def _brute_components(hv, thr):
     return {frozenset(c) for c in nx.connected_components(g) if len(c) > 1}
 
 
-@given(st.integers(0, 10_000), st.integers(2, 40), st.integers(0, 12))
-@settings(max_examples=60, deadline=None)
-def test_bucket_edges_components_match_bruteforce(seed, m, thr):
-    rng = np.random.default_rng(seed)
-    # mix of clustered values (small perturbations) and random ones
+def _clustered(rng, m):
+    """m hashes: small perturbations of a few bases, so both near and far
+    pairs occur."""
     base = rng.integers(0, 2**63, size=max(m // 3, 1), dtype=np.uint64)
     vals = []
     for _ in range(m):
         b = base[rng.integers(0, len(base))]
-        flips = rng.integers(0, 64, size=rng.integers(0, 8))
-        for f in flips:
+        for f in rng.integers(0, 64, size=rng.integers(0, 8)):
             b = np.uint64(b) ^ np.uint64(1 << int(f))
         vals.append(np.uint64(b))
-    hv = np.array(vals, dtype=np.uint64)
-    ids = np.array([f"n{i:03d}" for i in range(m)])
-    out = {"a": [], "b": [], "family": [], "hamming": []}
-    _bucket_edges(ids.copy(), hv.copy(), thr, out, "simhash")
+    return np.array(vals, dtype=np.uint64)
 
-    g = nx.Graph()
-    g.add_nodes_from(ids)
-    g.add_edges_from(zip(out["a"], out["b"]))
-    got = {frozenset(c) for c in nx.connected_components(g) if len(c) > 1}
-    exp = {
-        frozenset(ids[i] for i in c) for c in _brute_components(hv, thr)
-    }
-    assert got == exp
+
+@given(
+    st.integers(0, 10_000),
+    st.lists(st.integers(1, 40), min_size=1, max_size=6),
+    st.integers(0, 12),
+    st.integers(0, 12),
+)
+@settings(max_examples=60, deadline=None)
+def test_root_edges_components_match_bruteforce(seed, sizes, thr_sim, thr_ph):
+    """One batch of several sub-buckets, both families: every component of
+    every sub-bucket yields exactly its m-1 (min-id root, member) rows."""
+    rng = np.random.default_rng(seed)
+    thresholds = {"simhash": thr_sim, "phash": thr_ph}
+    rows, exp = [], set()
+    for g, m in enumerate(sizes):
+        fam = ("simhash", "phash")[g % 2]
+        hv = _clustered(rng, m)
+        ids = np.array([f"g{g}n{k:02d}" for k in range(m)])
+        perm = rng.permutation(m)  # members arrive in no id order
+        rows += [
+            (fam, 0, g, 0, ids[k], int(hv[k].astype(np.int64))) for k in perm
+        ]
+        for c in _brute_components(hv, thresholds[fam]):
+            root = min(c)
+            exp |= {
+                (ids[root], ids[k], fam,
+                 int(hv[root] ^ hv[k]).bit_count())
+                for k in c if k != root
+            }
+    pdf = pd.DataFrame(rows, columns=_KEY + ["image_id", "hval"])
+    pdf = pdf.sort_values(_KEY, kind="stable").reset_index(drop=True)
+    out = _root_edges(pdf, thresholds)
+    got = list(zip(out.a, out.b, out.family, out.hamming))
+    assert len(got) == len(set(got))
+    assert set(got) == exp
 
 
 def test_hamming_family_pairs_spark(spark):
@@ -69,7 +96,7 @@ def test_hamming_family_pairs_spark(spark):
         for i in range(n)
     ]
     df = spark.createDataFrame(pd.DataFrame(rows))
-    out = hamming_family_pairs(df, {"simhash": 8}).toPandas()
+    out = hamming_family_pairs(df).toPandas()
     g = nx.Graph()
     g.add_edges_from(zip(out.a, out.b))
     comp = {frozenset(c) for c in nx.connected_components(g) if len(c) > 1}
@@ -81,16 +108,15 @@ def test_hamming_family_pairs_spark(spark):
 
 def test_oversized_subbucket_raises():
     """Hamming salting keeps sub-buckets near bucket_cap; one above the
-    matrix bound means that invariant broke, so the kernel refuses it
-    instead of allocating an m×m matrix."""
-    from dedup_spark.operators.hamming import _MATRIX_MAX
-
-    m = _MATRIX_MAX + 1
-    ids = np.array([f"i{i:05d}" for i in range(m)])
-    hv = np.zeros(m, dtype=np.uint64)
-    out = {"a": [], "b": [], "family": [], "hamming": []}
+    bound means that invariant broke, so the kernel refuses it instead of
+    listing its O(m²) pairs."""
+    m = _SUBBUCKET_MAX + 1
+    pdf = pd.DataFrame({
+        "family": "phash", "band_idx": 0, "band_key": 7, "salt": 0,
+        "image_id": [f"i{i:05d}" for i in range(m)], "hval": 0,
+    })
     with pytest.raises(ValueError, match="salting"):
-        _bucket_edges(ids, hv, 4, out, "phash")
+        _root_edges(pdf, {"phash": 4})
 
 
 def test_planted_hot_bucket_bounded_memory(spark):
@@ -122,6 +148,6 @@ def test_planted_hot_bucket_bounded_memory(spark):
     assert rep.fanout[0] >= n // DEFAULT_CONFIG.bucket_cap
     sizes = salted.groupBy("salt").count().toPandas()["count"]
     assert sizes.max() <= DEFAULT_CONFIG.bucket_cap * 3  # ≈ cap, hash jitter
-    out = hamming_family_pairs(salted, {"simhash": 8})
+    out = hamming_family_pairs(salted)
     # every sub-bucket is a near-clique of the planted base → ~n-fanout edges
     assert out.count() > n * 0.9

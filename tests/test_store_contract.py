@@ -52,12 +52,14 @@ def test_iceberg_store_write_read_metrics(spark, tmp_path, monkeypatch):
 
 def test_parquet_metrics_fallback_for_nonlocal_root(spark, tmp_path):
     # a non-local table dir (s3://…) can't be globbed for parquet footers;
-    # _write_metrics must fall back to the Spark aggregate, not record 0
+    # _write_metrics must fall back to the Spark aggregate, not record 0,
+    # and a recommit of the same stage and run replaces its rows
     store = ParquetStore(str(tmp_path), "r1", "fp1")
     df = spark.range(23).selectExpr("cast(id as string) AS image_id")
     orig = store._table_dir
     store._table_dir = lambda name: f"s3://bucket/{name}"  # unreachable dir
-    rows = store._write_metrics("t_remote", df)
+    for _ in range(2):
+        rows = store._write_metrics("t_remote", df)
     store._table_dir = orig
     assert rows == 23
     m = store.metrics(spark).toPandas()
